@@ -25,6 +25,17 @@ Operators call ``.transform(truncate)`` (lazy) or
 ``.transform(truncate_eager)`` where they previously called
 ``.localCheckpoint(...)`` — chaining-compatible, and a no-op behavior
 change while no directory is configured.
+
+"Lazy" is weaker than it reads under AQE (the engine default, session.py):
+``localCheckpoint(eager=False)`` plans its subplan adaptively at call
+time, which runs every shuffle-map and broadcast stage of that subplan
+right then; only the final result stage waits for the next action.
+Jobs launched by the call itself (Spark 4.1, local mode): 1 for a
+one-row aggregate, 1 for a groupBy, 2 for a broadcast join plus groupBy
+and 3 when the broadcast side is itself an aggregate; with AQE off the
+same calls launch 0, 0, 1 and 1. A lazy truncate is therefore free only
+over a scan-and-map subplan; over aggregates or joins it runs most of
+the work an eager one does.
 """
 
 from __future__ import annotations
@@ -52,7 +63,9 @@ def reliable_checkpoint_dir() -> str | None:
 
 
 def truncate(df: DataFrame) -> DataFrame:
-    """Lazy lineage truncation (materializes with the next job)."""
+    """Lazy lineage truncation. The final stage materializes with the
+    next job, but under AQE the subplan's shuffle-map and broadcast
+    stages run when this is called (see the module doc)."""
     if _RELIABLE_DIR is not None:
         return df.checkpoint(eager=False)
     return df.localCheckpoint(eager=False)

@@ -5,14 +5,15 @@ without a global sort.
 (one total-order shuffle of the corpus) or an approximate sketch (whose
 error bound then infects every downstream SLA). The histogram-refine
 pattern gets EXACT order statistics in two bounded passes: pass 1 bins
-the column into BINS equal-width buckets (a map-side-combined groupBy on
-at most BINS groups); the tiny bin-count table locates, for each target
-rank k, the bucket holding the k-th smallest value and the residual rank
-within it; pass 2 ranks ONLY the rows of the (few, distinct) candidate
-buckets — expected n/BINS rows each — with a window partitioned by
-bucket. No stage ever sees a total order; a pathological bucket (all
-mass on one value) still bounds pass 2 at that bucket's row count, and
-the construction recurses if a deployment needs a hard cap.
+the column into equal-width buckets (a map-side-combined groupBy) and
+collects the per-bucket counts — at most bins + 1 rows — so the driver
+locates, for each target rank k, the bucket holding the k-th smallest
+value and the residual rank within it; pass 2 ranks ONLY the rows of the
+(few, distinct) candidate buckets — expected n/bins rows each — with a
+window partitioned by bucket. No stage ever sees a total order; a
+pathological bucket (all mass on one value) still bounds pass 2 at that
+bucket's row count, and the construction recurses if a deployment needs
+a hard cap.
 
 Rank semantics are explicit order statistics — k = floor((n-1) * p) + 1,
 the 1-based index of the p-quantile in the sorted column — so the oracle
@@ -27,12 +28,13 @@ live in operators/sketches.py; this is the exact path.
 
 from __future__ import annotations
 
+import math
+from bisect import bisect_left
+from itertools import accumulate
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from covid_19_data_engineering_spark.operators.lineage import (
-    truncate as _truncate,
-)
 from covid_19_data_engineering_spark.plans.registry import register
 from covid_19_data_engineering_spark.sources.tables import load_table
 
@@ -44,13 +46,13 @@ VAL_UNIT = 100
 # pass-2 ranks each candidate bucket in one window task of expected
 # n/bins rows; deriving bins from n caps that task at ~BIN_TARGET rows
 # no matter the corpus size (a fixed BINS=1024 would put ~10^9 rows
-# through one sort task on a 10^12-row column — round-7 verdict #2)
+# through one sort task on a 10^12-row column)
 BIN_TARGET = 1_000_000
 
 
 def _derive_bins(n: int, floor_bins: int, bin_target: int) -> int:
     """Bin count sized to the corpus: at least ``floor_bins`` (keeps the
-    cumsum table tiny on small data), growing as n // bin_target so the
+    pass-1 table tiny on small data), growing as n // bin_target so the
     expected pass-2 per-bucket row count stays ~bin_target at any scale.
     Same size-derivation pattern as SemDeDup's K (semdedup.py). The
     RESULT is bins-invariant — more buckets only narrow where the rank
@@ -59,59 +61,79 @@ def _derive_bins(n: int, floor_bins: int, bin_target: int) -> int:
     return max(floor_bins, n // bin_target)
 
 
-def _stats_row(df: DataFrame, col: str, floor_bins: int,
-               bin_target: int) -> DataFrame:
-    """One broadcastable row (_lo_u, _n, _width): integer-unit min plus
-    the derived equal-width bucket width, all in exact BIGINT arithmetic
-    inside the plan — no driver round-trip. The result downstream is
-    bins-invariant (more/fewer or shifted buckets only narrow where a
-    rank lands, never which value answers it), so the SQL half-up round
-    here vs the former Python banker's round is immaterial."""
-    return df.agg(
-        F.expr(f"CAST(round(min({col}) * {VAL_UNIT}) AS BIGINT)").alias("_lo_u"),
-        F.expr(f"CAST(round(max({col}) * {VAL_UNIT}) AS BIGINT)").alias("_hi_u"),
-        F.count(F.lit(1)).alias("_n"),
-    ).select(
-        "_lo_u", "_n",
-        F.expr(f"greatest(CAST(1 AS BIGINT), (_hi_u - _lo_u) div "
-               f"greatest({floor_bins}, _n div {bin_target}) + 1)")
-        .alias("_width"),
-    )
+def _cents(col: str) -> str:
+    return f"CAST(round({col} * {VAL_UNIT}) AS BIGINT)"
 
 
-def _located_values(binned: DataFrame, targets: DataFrame) -> DataFrame:
-    """Shared refine tail: cumsum the per-bucket counts, locate each
-    target rank's (bucket, residual rank), then row_number ONLY the
-    candidate buckets and join the residual ranks. ``binned``:
-    (v, b [, extra label cols on targets]); ``targets``: (<labels>, rank).
-    Output: (<labels>, rank, value)."""
-    counts = binned.groupBy("b").agg(F.count(F.lit(1)).alias("cnt"))
-    cum_w = Window.orderBy("b").rowsBetween(Window.unboundedPreceding, -1)
-    cum = counts.withColumn(
-        "below", F.coalesce(F.sum("cnt").over(cum_w), F.lit(0)))
-    label_cols = [c for c in targets.columns if c != "rank"]
-    # bucket holding rank k: below < k <= below + cnt  (tiny join: bins x q)
-    # Round 14 (guide §5): ``located`` (<= q rows) is referenced twice
-    # below (candidate-bucket semi-join + residual-rank join); without
-    # truncation each reference re-instantiates the whole cumsum subtree
-    # (another full pass-1 scan). Lazy checkpoint = both references read
-    # the cached handful of rows; still one action.
-    located = _truncate(
-        targets.join(F.broadcast(cum),
-                     (F.col("below") < F.col("rank"))
-                     & (F.col("rank") <= F.col("below") + F.col("cnt")))
-        .select(*label_cols, "rank", "b",
-                (F.col("rank") - F.col("below")).alias("rk_in"))
-    )
-    ranked = (
-        binned.join(F.broadcast(located.select("b").distinct()), "b")
-        .withColumn("rn", F.row_number().over(
-            Window.partitionBy("b").orderBy("v")))
-    )
+def _stats(df: DataFrame, col: str, weight: str | None = None) -> tuple:
+    """(lo_u, hi_u, n[, W]) in one driver ``first()``: integer-unit min
+    and max (0 on empty input), the row count and, with ``weight``, the
+    BIGINT total weight (0 on empty input)."""
+    exprs = [_cents(f"min({col})"), _cents(f"max({col})"), "COUNT(*)"]
+    if weight is not None:
+        exprs.append(f"CAST(sum({weight}) AS BIGINT)")
+    return tuple(v or 0 for v in df.selectExpr(*exprs).first())
+
+
+def _width(lo_u: int, hi_u: int, n: int, bins: int, bin_target: int) -> int:
+    """Equal-width bucket width in integer units over [lo_u, hi_u]. Any
+    width >= 1 (and any origin <= the minimum) keeps bucketing monotone,
+    so only pass-2 sizes depend on how tight the bounds are."""
+    return max(1, (hi_u - lo_u) // _derive_bins(n, bins, bin_target) + 1)
+
+
+def _rank(total: int, p: float) -> int:
+    """k = floor((total-1) * p) + 1 — the same IEEE double product the
+    oracle takes."""
+    return math.floor((total - 1) * p) + 1
+
+
+def _refine(df: DataFrame, col: str, lo_u: int, width: int,
+            targets: list[tuple], labels: list[tuple[str, str]],
+            weight: str = "1") -> DataFrame:
+    """The refine kernel. ``targets``: (<label values>, rank) tuples,
+    ``labels``: their (name, type). Returns a lazy (<labels>, rank,
+    value) frame: per target, the ``col`` value whose running ``weight``
+    total (BIGINT, under the value order) first reaches the rank. With
+    weight 1 the running total is the row number, so the rank is a plain
+    1-based order statistic. Ranks outside [1, total] yield no row.
+
+    Pass 1 collects per-bucket weight sums (<= bins + 1 rows) and
+    locates each rank's bucket and residual rank on the driver. Pass 2
+    is the returned frame: a running-sum window over the candidate
+    buckets only, with each located (bucket, residual) pair attached as
+    a literal and matched by the crossing test cumw - w < k <= cumw."""
+    binned = df.select(
+        F.col(col).alias("v"),
+        F.expr(f"CAST({weight} AS BIGINT)").alias("w"),
+        F.expr(f"({_cents(col)} - {lo_u}) div {width}").alias("b"),
+    ).where(F.col("b").isNotNull())
+    per_b = sorted(tuple(r) for r in
+                   binned.groupBy("b").agg(F.sum("w")).collect())
+    cum = list(accumulate(m for _, m in per_b))
+    located = []
+    for *vals, k in targets:
+        i = bisect_left(cum, k)
+        b, k_in = ((per_b[i][0], k - (cum[i - 1] if i else 0))
+                   if k >= 1 and i < len(cum) else (None, None))
+        located.append((vals, k, b, k_in))
+    hits = F.array(*[F.struct(
+        F.lit(b).cast("long").alias("_b"),
+        F.lit(k_in).cast("long").alias("_k"),
+        *[F.lit(x).cast(t).alias(name) for x, (name, t) in zip(vals, labels)],
+        F.lit(k).cast("long").alias("rank"),
+    ) for vals, k, b, k_in in located])
+    cand = sorted({b for *_, b, _ in located if b is not None})
+    run_w = Window.partitionBy("b").orderBy("v").rowsBetween(
+        Window.unboundedPreceding, Window.currentRow)
     return (
-        located.join(ranked, (located["b"] == ranked["b"])
-                     & (F.col("rk_in") == F.col("rn")))
-        .select(*label_cols, "rank", F.col("v").alias("value"))
+        binned.where(F.col("b").isin(cand))
+        .withColumn("cumw", F.sum("w").over(run_w))
+        .select("v", F.inline(F.filter(hits, lambda t: (
+            (t["_b"] == F.col("b")) & (t["_k"] <= F.col("cumw"))
+            & (F.col("cumw") - F.col("w") < t["_k"])))))
+        .select(*[name for name, _ in labels], "rank",
+                F.col("v").alias("value"))
     )
 
 
@@ -121,46 +143,15 @@ def exact_quantiles_histogram(df: DataFrame, col: str,
                               bin_target: int = BIN_TARGET) -> DataFrame:
     """(quantile, rank, value) — exact order statistics of ``df[col]``.
 
-    Pass 1: integer-unit values bin into equal-width buckets — at least
-    ``bins`` of them, scaled up to n // ``bin_target`` so pass 2's
-    per-bucket window task is bounded at ~bin_target expected rows at
-    any corpus size; the bin-count cumsum (a window over <= bins rows)
-    converts each target rank into (bucket, rank-within-bucket). Pass 2:
-    a row_number window over candidate buckets only.
-
-    Round-13 optimization (guide §1.2: fewer passes): the whole refine is
-    ONE plan / ONE action — min/max/n ride a broadcast one-row aggregate
-    instead of a driver ``first()``, target ranks k = floor((n-1)p)+1 are
-    derived in-plan with the identical integer arithmetic, and candidate
-    buckets flow through a broadcast semi-join instead of a collected
-    ``isin`` literal. Was 3 driver actions (3 jobs, 3 scans queued
-    sequentially); now 1. Empty input yields an empty result frame (the
-    former ValueError needed a driver-side count).
-
-    Round 14 (guide §5): the ONE-ROW stats frame is referenced three
-    times (binning twice, rank targets once) and each reference used to
-    re-instantiate the min/max/count scan; a lazy checkpoint makes later
-    references read the cached row — pass-1/pass-2 scans remain, the
-    duplicated stat scans go (measured 1.35 -> 1.05 s warm, 6.1 -> 1.5 s
-    cold at sf0.1; identical rows)."""
-    stats = _truncate(_stats_row(df, col, bins, bin_target))
-    binned = df.crossJoin(F.broadcast(stats)).select(
-        F.col(col).alias("v"),
-        F.expr(f"(CAST(round({col} * {VAL_UNIT}) AS BIGINT) - _lo_u) "
-               "div _width").alias("b"),
-    )
-    # target ranks: k = floor((n-1) * p) + 1, exact integer arithmetic
-    # (floor(double) is BIGINT-exact here and replayed by the oracle)
-    targets = stats.select(
-        F.explode(F.array(*[F.lit(float(p)) for p in quantiles]))
-        .alias("quantile"),
-        "_n",
-    ).select(
-        "quantile",
-        (F.floor((F.col("_n") - 1) * F.col("quantile")) + 1)
-        .cast("long").alias("rank"),
-    )
-    return _located_values(binned, targets)
+    Integer-unit values bin into equal-width buckets — at least ``bins``
+    of them, scaled up to n // ``bin_target`` so pass 2's per-bucket
+    window task is bounded at ~bin_target expected rows at any corpus
+    size — and the refine kernel turns each rank k = floor((n-1)p)+1
+    into its value. Empty input yields an empty result frame."""
+    lo_u, hi_u, n = _stats(df, col)
+    return _refine(df, col, lo_u, _width(lo_u, hi_u, n, bins, bin_target),
+                   [(float(p), _rank(n, p)) for p in quantiles],
+                   [("quantile", "double")])
 
 
 def _quantiles_oracle_sql() -> str:
@@ -192,8 +183,8 @@ def _quantiles_oracle_sql() -> str:
     f"histogram refine: integer-unit binning into max({BINS}, n // "
     f"{BIN_TARGET}) equal-width buckets (map-side combine, <= bins "
     "groups; the n-derived count caps pass 2's per-bucket window task "
-    "at ~BIN_TARGET rows at any scale), cumsum over the tiny count "
-    "table locates each rank's bucket + residual rank, then a window "
+    "at ~BIN_TARGET rows at any scale), a driver cumsum over the tiny "
+    "count table locates each rank's bucket + residual rank, then a window "
     "over candidate buckets ONLY — no global sort anywhere; the result "
     "is bins-invariant, so the oracle states the same k = floor((n-1)p)+1 "
     "ranks against a plain ranked window.",
@@ -207,9 +198,17 @@ def exact_price_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # Robust (median/MAD) outlier report — the scale-safe alternative to
 # mean/stddev outlier fences, which a single fat-tailed shard can corrupt.
-# Both order statistics come from the histogram-refine pass above, so the
-# whole report costs four bounded passes and never sorts the corpus.
+# Both order statistics come from the histogram-refine kernel above, so the
+# whole report costs a handful of bounded passes and never sorts the corpus.
 # --------------------------------------------------------------------------
+
+
+def _single_value(df: DataFrame, col: str, lo_u: int, width: int,
+                  rank: int) -> float | None:
+    """The value at one rank via the refine kernel, None when the rank
+    is out of range."""
+    rows = _refine(df, col, lo_u, width, [(rank,)], []).collect()
+    return rows[0]["value"] if rows else None
 
 
 def mad_outlier_report(df: DataFrame, col: str, group: str,
@@ -217,56 +216,39 @@ def mad_outlier_report(df: DataFrame, col: str, group: str,
     """Per ``group``: rows whose |x - median| exceeds ``z`` * MAD, with the
     global median/MAD computed exactly via histogram refine.
 
-    100 TB shape: median and MAD are each an exact_quantiles_histogram run
-    (two bounded passes, no global sort); each yields ONE scalar — the
-    only driver round-trips, both O(1) rows. The outlier fence is then a
-    single map-side-combined groupBy where the decision runs in BIGINT
-    cents (round(|x - med| * 100) > z * round(mad * 100)) so Spark and
-    the oracle decide identically with no float boundary.
+    100 TB shape: median and MAD each come from the refine kernel (two
+    bounded passes, no global sort) and reach the driver as one scalar
+    each. The MAD refine skips its own stats pass: deviations bin from
+    origin 0 with the bound max(hi - med, med - lo), which only sizes
+    pass 2. The outlier fence is then a single map-side-combined groupBy
+    where the decision runs in BIGINT cents (round(|x - med| * 100) >
+    z * round(mad * 100)) with med and mad as double literals, so Spark
+    and the oracle decide identically with no float boundary.
     """
-    # (a _spread + checkpoint of the projection was tried here in
-    # round 11 and MEASURED SLOWER — 3.6s -> 6.3s at sf0.1: the repeated
-    # scans are cheap integer binning over a small file, and the
-    # repartition shuffle + cache materialization cost more than the
-    # single-task scans they replace. The fan-out rule only pays for
-    # CPU-dense maps like md5 pipelines.)
-    # Round 13 (guide §1.2): both order statistics stay IN the plan as
-    # broadcast one-row frames instead of driver floats — the whole
-    # report is ONE action (was 5: two quantile runs of first()+collect
-    # each, then the final collect), with the identical integer-cents
-    # fence arithmetic.
-    # Round 14 (guide §5 lineage, r13 ADVICE): WITHOUT truncation the
-    # med/mad one-row subplans nest MULTIPLICATIVELY — each textual
-    # reference to med_row re-instantiates its whole quantile subtree,
-    # and mad_row's subtree contains med_row several times over, so the
-    # committed r13 plan held 162 lineitem scans and zero ReusedExchange
-    # (plans/r14/robust_price_outliers_before.txt). Lazily checkpointing
-    # each ONE-ROW frame makes every later reference read the cached
-    # single row instead of replanting the subtree: the base table is
-    # scanned O(passes) times total (8 scans, plans/..._after.txt), not
-    # O(plan references). Still one driver action; materialization rides
-    # the consuming job's broadcast build.
-    med_row = _truncate(exact_quantiles_histogram(
-        df.select(col), col, (0.5,)).select(F.col("value").alias("_med")))
-    dev = (
-        df.select(col).crossJoin(F.broadcast(med_row))
-        .select(F.abs(F.col(col) - F.col("_med")).alias("dev"))
-    )
-    mad_row = _truncate(exact_quantiles_histogram(
-        dev, "dev", (0.5,)).select(F.col("value").alias("_mad")))
-    dev_c = F.expr(f"CAST(round(abs({col} - _med) * 100) AS BIGINT)")
-    mad_c = F.expr("CAST(round(_mad * 100) AS BIGINT)")
+    x = df.select(col)
+    lo_u, hi_u, n = _stats(x, col)
+    k = _rank(n, 0.5)
+    med = _single_value(x, col, lo_u,
+                        _width(lo_u, hi_u, n, BINS, BIN_TARGET), k)
+    mad = None
+    if med is not None:
+        med_u = round(med * VAL_UNIT)
+        bound = max(hi_u - med_u, med_u - lo_u)
+        dev = x.select(F.abs(F.col(col) - med).alias("dev"))
+        mad = _single_value(dev, "dev", 0,
+                            _width(0, bound, n, BINS, BIN_TARGET), k)
+    med_l, mad_l = F.lit(med).cast("double"), F.lit(mad).cast("double")
+    dev_c = F.round(F.abs(F.col(col) - med_l) * VAL_UNIT).cast("long")
+    mad_c = F.round(mad_l * VAL_UNIT).cast("long")
     return (
-        df.crossJoin(F.broadcast(med_row)).crossJoin(F.broadcast(mad_row))
-        .groupBy(group)
+        df.groupBy(group)
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
             F.sum(F.when(dev_c > z * mad_c, 1).otherwise(0))
             .alias("n_outliers"),
-            F.round(F.min("_med"), 2).alias("median_value"),
-            F.round(F.min("_mad"), 2).alias("mad"),
+            F.round(med_l, 2).alias("median_value"),
+            F.round(mad_l, 2).alias("mad"),
         )
-        .select(group, "n_rows", "n_outliers", "median_value", "mad")
         .orderBy(group)
     )
 
@@ -332,71 +314,18 @@ def weighted_quantiles_histogram(df: DataFrame, col: str, weight_expr: str,
     the smallest ``col`` value at which the running total of
     ``weight_expr`` (an integer-unit SQL expression) reaches the target
     weight rank kw = floor((W-1)*p) + 1 under the (value, input-order-
-    free) total order. Same two bounded passes as the count version
-    above: per-bin weight sums + a cumsum over <= bins rows locate each
-    target's bucket; a weight-cumulative window over candidate buckets
-    only finds the crossing row. Weights are exact BIGINTs, so the
-    crossing test (cumw - w < kw_in <= cumw) never touches a float.
+    free) total order. Same refine kernel as the count version, with the
+    row weight as the running-sum term (bins still derive from the ROW
+    count — pass-2 work is rows ranked, not weight mass). Weights are
+    exact BIGINTs, so the crossing test (cumw - w < kw_in <= cumw) never
+    touches a float. Zero total weight yields an empty result.
     """
-    # one broadcast stats row carries lo/width (bins derive from the ROW
-    # count — pass-2 work is rows ranked, not weight mass) plus the total
-    # weight; the whole refine is ONE plan / ONE action (round-13, guide
-    # §1.2 — was a driver first() + a cand-bin collect). Zero total
-    # weight yields an empty result (the former ValueError needed the
-    # driver round-trip).
-    stats = _truncate(df.selectExpr(
-        f"CAST(round(min({col}) * {VAL_UNIT}) AS BIGINT) AS _lo_u",
-        f"CAST(round(max({col}) * {VAL_UNIT}) AS BIGINT) AS _hi_u",
-        f"CAST(sum({weight_expr}) AS BIGINT) AS _w",
-        "COUNT(*) AS _n",
-    ).selectExpr(
-        "_lo_u", "_w",
-        f"greatest(CAST(1 AS BIGINT), (_hi_u - _lo_u) div "
-        f"greatest({bins}, _n div {bin_target}) + 1) AS _width",
-    ))
-    binned = df.crossJoin(F.broadcast(stats)).selectExpr(
-        f"{col} AS v",
-        f"CAST({weight_expr} AS BIGINT) AS w",
-        f"(CAST(round({col} * {VAL_UNIT}) AS BIGINT) - _lo_u) "
-        "div _width AS b",
-    )
-    counts = binned.groupBy("b").agg(F.sum("w").alias("wcnt"))
-    cum_w = Window.orderBy("b").rowsBetween(Window.unboundedPreceding, -1)
-    cum = counts.withColumn(
-        "below", F.coalesce(F.sum("wcnt").over(cum_w), F.lit(0)))
-    targets = stats.select(
-        F.explode(F.array(*[F.lit(float(p)) for p in quantiles]))
-        .alias("quantile"),
-        "_w",
-    ).select(
-        "quantile",
-        (F.floor((F.col("_w") - 1) * F.col("quantile")) + 1)
-        .cast("long").alias("weight_rank"),
-    )
-    located = _truncate(
-        targets.join(F.broadcast(cum),
-                     (F.col("below") < F.col("weight_rank"))
-                     & (F.col("weight_rank") <= F.col("below") + F.col("wcnt")))
-        .select("quantile", "weight_rank", "b",
-                (F.col("weight_rank") - F.col("below")).alias("kw_in"))
-    )
-    in_w = Window.partitionBy("b").orderBy("v").rowsBetween(
-        Window.unboundedPreceding, 0)
-    ranked = (
-        binned.join(F.broadcast(located.select("b").distinct()), "b")
-        .withColumn("cumw", F.sum("w").over(in_w))
-    )
-    # the crossing VALUE is unique (ties on v accumulate together under
-    # the value ordering, and any row of the crossing value works), so
-    # pick the minimal crossing row per target
-    return (
-        located.join(ranked, (located["b"] == ranked["b"])
-                     & (F.col("cumw") >= F.col("kw_in"))
-                     & (F.col("cumw") - F.col("w") < F.col("kw_in")))
-        .groupBy("quantile", "weight_rank")
-        .agg(F.min("v").alias("value"))
-        .orderBy("quantile")
-    )
+    lo_u, hi_u, n, total_w = _stats(df, col, weight_expr)
+    return _refine(
+        df, col, lo_u, _width(lo_u, hi_u, n, bins, bin_target),
+        [(float(p), _rank(total_w, p)) for p in quantiles],
+        [("quantile", "double")], weight_expr,
+    ).withColumnRenamed("rank", "weight_rank").orderBy("quantile")
 
 
 def _wq_oracle_sql() -> str:
@@ -466,35 +395,28 @@ def winsorized_mean(df: DataFrame, col: str,
     ``df[col]`` clipped at the exact lo_p/hi_p order statistics.
 
     The fences come from the two-pass histogram refine (no global sort,
-    no sketch error); clipping and the mean run as ONE exact-integer
-    aggregate over cents — least/greatest against the two broadcast
-    fence scalars — so the estimate is association-order-free. Means use
-    the shared half-up rounding (floor(x*1e4+0.5)/1e4; a clipped-cents
-    mean CAN land on an exact decimal half where engine ROUNDs split).
+    no sketch error) and reach the driver as two scalars; clipping and
+    the mean run as ONE exact-integer aggregate over cents —
+    least/greatest against the two fences as double literals — so the
+    estimate is association-order-free. Means use the shared half-up
+    rounding (floor(x*1e4+0.5)/1e4; a clipped-cents mean CAN land on an
+    exact decimal half where engine ROUNDs split).
     """
-    fences = exact_quantiles_histogram(df, col, quantiles=(lo_p, hi_p))
-    lo_hi = fences.groupBy().agg(
-        F.min(F.when(F.col("quantile") == lo_p, F.col("value")))
-        .alias("p_lo"),
-        F.min(F.when(F.col("quantile") == hi_p, F.col("value")))
-        .alias("p_hi"),
-    )
-    cents = f"CAST(round({col} * {VAL_UNIT}) AS BIGINT)"
-    clipped = df.crossJoin(F.broadcast(lo_hi)).selectExpr(
-        f"{cents} AS c",
-        f"CAST(round(p_lo * {VAL_UNIT}) AS BIGINT) AS lo_c",
-        f"CAST(round(p_hi * {VAL_UNIT}) AS BIGINT) AS hi_c",
-        "p_lo", "p_hi",
-    )
+    fences = {r["quantile"]: r["value"] for r in exact_quantiles_histogram(
+        df, col, quantiles=(lo_p, hi_p)).collect()}
+    p_lo = F.lit(fences.get(lo_p)).cast("double")
+    p_hi = F.lit(fences.get(hi_p)).cast("double")
+    c = F.round(F.col(col) * VAL_UNIT).cast("long")
+    clipped = F.least(F.greatest(c, F.round(p_lo * VAL_UNIT).cast("long")),
+                      F.round(p_hi * VAL_UNIT).cast("long"))
     mean4 = ("CAST(FLOOR(CAST(SUM({v}) AS DOUBLE) / COUNT(*) "
              f"/ {VAL_UNIT}.0 * 10000.0 + 0.5) AS DOUBLE) / 10000.0")
-    return clipped.groupBy().agg(
+    return df.select(c.alias("c"), clipped.alias("clipped")).groupBy().agg(
         F.count(F.lit(1)).alias("n_rows"),
-        F.min("p_lo").alias("p_lo"),
-        F.min("p_hi").alias("p_hi"),
+        p_lo.alias("p_lo"),
+        p_hi.alias("p_hi"),
         F.expr(mean4.format(v="c")).alias("raw_mean"),
-        F.expr(mean4.format(v="least(greatest(c, lo_c), hi_c)"))
-        .alias("winsorized_mean"),
+        F.expr(mean4.format(v="clipped")).alias("winsorized_mean"),
     )
 
 
@@ -539,7 +461,7 @@ def winsorized_mean(df: DataFrame, col: str,
     f"p{int(WINSOR_LO * 100)}/p{int(WINSOR_HI * 100)} order statistics "
     "from the histogram-refine quantile pass, no global sort): clipping "
     "and both means are one exact-integer-cents aggregate against two "
-    "broadcast fence scalars, with shared half-up rounding — the robust "
+    "fence literals, with shared half-up rounding — the robust "
     "location estimate that keeps tail mass at the fence instead of "
     "discarding it.",
 )
@@ -554,9 +476,9 @@ def winsorized_price_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The classic nonparametric CI: for X_(1..n) sorted, [X_(r_lo), X_(r_hi)]
 # covers the population median with >= 95% probability where the ranks
 # come from Binomial(n, 1/2) normal approximation — no distributional
-# assumption, just order statistics. Reuses the histogram-refine shape
-# (bin, cumsum to locate, window candidate buckets only — never a global
-# sort), with RANK targets instead of quantile fractions.
+# assumption, just order statistics. Reuses the histogram-refine kernel
+# (bin, driver cumsum to locate, window candidate buckets only — never a
+# global sort), with RANK targets instead of quantile fractions.
 
 
 def values_at_ranks(df: DataFrame, col: str,
@@ -565,27 +487,19 @@ def values_at_ranks(df: DataFrame, col: str,
                     bin_target: int = BIN_TARGET,
                     n: int | None = None) -> DataFrame:
     """(stat, rank, value) — exact order statistics at explicit 1-based
-    ranks. Same refine plan as exact_quantiles_histogram, and since
-    round 13 the same single-plan / single-action shape (guide §1.2).
+    ranks, through the same refine kernel as exact_quantiles_histogram.
     ``n`` (when the caller already counted, as the median-CI rank
-    derivation must) keeps the rank-bounds validation without its own
-    count job; n=None skips validation — out-of-range ranks simply
-    return no row."""
+    derivation must) validates the ranks before any job runs; n=None
+    skips validation — out-of-range ranks simply return no row."""
     if n is not None:
         if n == 0:
             raise ValueError(f"values_at_ranks: {col} has no rows")
         for _, r in labeled_ranks:
             if not 1 <= r <= n:
                 raise ValueError(f"rank {r} outside [1, {n}]")
-    stats = _truncate(_stats_row(df, col, bins, bin_target))
-    binned = df.crossJoin(F.broadcast(stats)).select(
-        F.col(col).alias("v"),
-        F.expr(f"(CAST(round({col} * {VAL_UNIT}) AS BIGINT) - _lo_u) "
-               "div _width").alias("b"),
-    )
-    tdf = df.sparkSession.createDataFrame(
-        labeled_ranks, "stat string, rank long")
-    return _located_values(binned, tdf)
+    lo_u, hi_u, n_all = _stats(df, col)
+    return _refine(df, col, lo_u, _width(lo_u, hi_u, n_all, bins, bin_target),
+                   labeled_ranks, [("stat", "string")])
 
 
 def median_ci_ranks(n: int, z: float = 1.959963985) -> tuple[int, int, int]:

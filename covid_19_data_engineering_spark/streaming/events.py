@@ -487,18 +487,22 @@ def _stream_state_width(spark: SparkSession, sf_dir: str) -> int:
     stream-stream join at sf0.1 with a size-derived width. One state
     partition per ~16 MB of source input, floor 4, capped at the
     configured width — at production input sizes the cap returns the
-    configured width unchanged."""
+    configured width unchanged. A path the local filesystem cannot size
+    (``s3a://``, ``hdfs://``) falls back to the configured width."""
     import os
 
-    table_path = os.path.join(sf_dir, "events.parquet")
-    if os.path.isdir(table_path):
-        size = sum(
-            os.path.getsize(os.path.join(r, f))
-            for r, _, fs in os.walk(table_path) for f in fs
-        )
-    else:
-        size = os.path.getsize(table_path)
     configured = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    table_path = os.path.join(sf_dir, "events.parquet")
+    try:
+        if os.path.isdir(table_path):
+            size = sum(
+                os.path.getsize(os.path.join(r, f))
+                for r, _, fs in os.walk(table_path) for f in fs
+            )
+        else:
+            size = os.path.getsize(table_path)
+    except OSError:
+        return configured
     return max(4, min(configured, size // (16 * 1024 * 1024) + 1))
 
 
@@ -510,7 +514,14 @@ def _drain_memory_sink(spark: SparkSession, stream_df: DataFrame,
     immediately — streams pin their confs at start), drain with
     availableNow, fail loudly on timeout (a partially-filled sink would
     surface as an opaque hash mismatch), clean the checkpoint, return
-    the sink table."""
+    the sink table.
+
+    The width is set by mutating the SESSION-wide
+    ``spark.sql.shuffle.partitions`` between ``start()`` and the restore.
+    That assumes sequential use of the session: a batch query planned on
+    another thread inside that window would plan with the stream's
+    width. Results would not change (only partitioning does), but its
+    shuffle width would."""
     import shutil
     import tempfile
 

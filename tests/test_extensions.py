@@ -2126,6 +2126,13 @@ def test_rolling_zscore_flags_only_the_planted_spike(spark):
 
 
 def test_mad_outlier_report_on_planted_fat_tail(spark):
+    """Exact median/MAD fences, and a Spark-job budget for build plus
+    collect: 14 jobs with ranks located on the driver. The refine that
+    kept its stats and located-rank frames in the plan behind lazy
+    truncates ran 31 here, because under AQE each truncate ran its
+    subplan's shuffle and broadcast stages as separate jobs."""
+    import uuid
+
     from covid_19_data_engineering_spark.operators.quantiles import (
         mad_outlier_report,
     )
@@ -2133,7 +2140,15 @@ def test_mad_outlier_report_on_planted_fat_tail(spark):
     vals = [float(v) for v in range(1, 10)] + [100.0]
     df = spark.createDataFrame(
         [("A", v) for v in vals], "grp string, x double")
-    row = mad_outlier_report(df, "x", "grp").collect()[0]
+    sc = spark.sparkContext
+    group = f"mad-job-budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        row = mad_outlier_report(df, "x", "grp").collect()[0]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 14
     # n=10: median = 5 (rank 5 of 1..9,100), MAD = 2 (rank 5 of sorted devs)
     assert row["median_value"] == 5.0
     assert row["mad"] == 2.0

@@ -119,14 +119,32 @@ def test_exact_quantiles_hand_checked(spark):
 
 def test_exact_quantiles_degenerate_single_bucket(spark):
     """All-equal values collapse to one histogram bucket: every quantile
-    is that value and pass 2 is bounded by the bucket's row count."""
+    is that value and pass 2 is bounded by the bucket's row count. Empty
+    input gives an empty frame of the usual schema, a bigint column
+    keeps a bigint ``value``, and zero total weight locates nothing."""
     from covid_19_data_engineering_spark.operators.quantiles import (
         exact_quantiles_histogram,
+        weighted_quantiles_histogram,
     )
 
     df = spark.createDataFrame([(7.5,)] * 50, "x double")
     rows = exact_quantiles_histogram(df, "x").collect()
     assert len(rows) == 5 and all(r["value"] == 7.5 for r in rows)
+
+    empty = exact_quantiles_histogram(
+        spark.createDataFrame([], "x double"), "x")
+    assert empty.collect() == []
+    assert empty.dtypes == [
+        ("quantile", "double"), ("rank", "bigint"), ("value", "double")]
+
+    ints = exact_quantiles_histogram(
+        spark.createDataFrame([(i,) for i in range(1, 11)], "x bigint"), "x")
+    assert ints.dtypes[-1] == ("value", "bigint")
+    assert {r["quantile"]: r["value"] for r in ints.collect()} == {
+        0.25: 3, 0.5: 5, 0.75: 7, 0.9: 9, 0.99: 9}
+
+    zero_w = spark.createDataFrame([(1.0, 0), (2.0, 0)], "x double, w int")
+    assert weighted_quantiles_histogram(zero_w, "x", "w").collect() == []
 
 
 def test_sequence_packing_plan_buckets_the_big_window(spark):

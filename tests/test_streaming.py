@@ -52,6 +52,17 @@ def test_stream_tumbling_matches_batch_twin(spark):
     assert got == want
 
 
+def test_stream_state_width_falls_back_on_non_local_paths(spark):
+    """A path the local filesystem cannot size keeps the configured
+    shuffle width instead of crashing the drain."""
+    from covid_19_data_engineering_spark.streaming.events import (
+        _stream_state_width,
+    )
+
+    configured = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert _stream_state_width(spark, "s3a://bucket/sf0.1") == configured
+
+
 def test_stream_dedup_emits_distinct_event_ids(spark):
     stream = events_stream(spark, SF_SMOKE)
     out = _run_to_memory(stream_dedup(stream), "t_dedup", spark)
