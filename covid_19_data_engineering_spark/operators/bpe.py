@@ -64,6 +64,9 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from covid_19_data_engineering_spark.operators.lineage import (
+    truncate_eager as _truncate_eager,
+)
 from covid_19_data_engineering_spark.plans.registry import register
 from covid_19_data_engineering_spark.sources.tables import load_table
 
@@ -155,14 +158,14 @@ def bpe_train(docs: DataFrame, n_merges: int = N_MERGES,
     words = _seed_symbols(word_frequencies(docs, text_col))
     # every round reads the previous round's words twice (pair counts +
     # replace) — checkpoint per round, the iterative-operator rule
-    words = words.localCheckpoint(eager=True)
+    words = words.transform(_truncate_eager)
     merges = []
     for rank in range(1, n_merges + 1):
         best = (
             _pair_counts(words)
             .orderBy(F.col("total").desc(), "l", "r")
             .limit(1)
-            .localCheckpoint(eager=True)
+            .transform(_truncate_eager)
         )
         # merge exhaustion (every word fully merged / single-symbol): an
         # empty best crossJoined below would DELETE the whole vocabulary.
@@ -188,7 +191,7 @@ def bpe_train(docs: DataFrame, n_merges: int = N_MERGES,
                 _apply_merge(F.col("ws"), F.col("l"), F.col("r")).alias("ws"),
                 "cnt",
             )
-            .localCheckpoint(eager=True)
+            .transform(_truncate_eager)
         )
     out = merges[0]
     for m in merges[1:]:
@@ -226,7 +229,7 @@ def bpe_train_batched(docs: DataFrame, n_rounds: int = BATCH_ROUNDS,
     application order (round, then in-round window rank)."""
     spark = docs.sparkSession
     words = _seed_symbols(word_frequencies(docs, text_col))
-    words = words.localCheckpoint(eager=True)
+    words = words.transform(_truncate_eager)
     learned: list[tuple] = []
     for rnd in range(1, n_rounds + 1):
         # TakeOrdered-of-B (orderBy + limit) — an unpartitioned
@@ -255,7 +258,7 @@ def bpe_train_batched(docs: DataFrame, n_rounds: int = BATCH_ROUNDS,
         )
         words = (
             words.select(_unwrap(folded).alias("ws"), "cnt")
-            .localCheckpoint(eager=True)
+            .transform(_truncate_eager)
         )
     out = spark.createDataFrame(
         [(i, l, r, l + r, total)

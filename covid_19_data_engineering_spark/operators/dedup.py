@@ -45,6 +45,10 @@ import math
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 
+from covid_19_data_engineering_spark.operators.lineage import (
+    truncate as _truncate,
+    truncate_eager as _truncate_eager,
+)
 from covid_19_data_engineering_spark.operators.vectors import (
     fold_cosine_sql,
     _spread,
@@ -174,7 +178,7 @@ def ngram_blocked_candidates(df: DataFrame, threshold: float, k: int = 3,
         F.array_distinct(
             F.transform(shingles_col(tokens_col("text"), k), _shingle_base_hash)
         ).alias("sh"),
-    ).localCheckpoint(eager=True)
+    ).transform(_truncate_eager)
     # ^ materialize the shingle sets ONCE: both sides of the self-join (and
     # the explode side's 3x bucket fan-out) would otherwise re-run the
     # split -> shingle -> md5-fold pipeline per reference — the same
@@ -365,7 +369,7 @@ def exact_text_collapse(df: DataFrame, text_col: str = "text",
     # than the double planning it avoids.
     mapped = eligible.withColumn(
         "_rep", F.min(key_col).over(Window.partitionBy("_fp"))
-    ).localCheckpoint(eager=True)
+    ).transform(_truncate_eager)
     # _spread: the fingerprint window's shuffle DOES hash-partition the
     # checkpoint, but AQE's coalescer sizes partitions by BYTES and a local
     # corpus is kilobytes — it folds the exchange back to ONE partition, so
@@ -411,7 +415,7 @@ def _minhash_rep_pairs(df: DataFrame, text_col: str = "text",
     DF, and stream batches are pre-deduped upstream.
     """
     reps, members = exact_text_collapse(df, text_col, key_col)
-    bands = minhash_bands(reps, text_col, key_col).localCheckpoint(eager=True)
+    bands = minhash_bands(reps, text_col, key_col).transform(_truncate_eager)
     return band_self_pairs(bands, key_col), members
 
 
@@ -614,7 +618,7 @@ def _ngram_collapse(df: DataFrame, k: int = 3, block_col: str = "lang",
     # exact_text_collapse rationale)
     mapped = eligible.withColumn(
         "_rep", F.min(key_col).over(Window.partitionBy("block", "_fp"))
-    ).localCheckpoint(eager=True)
+    ).transform(_truncate_eager)
     reps_sh = (
         mapped.where(F.col(key_col) == F.col("_rep"))
         .select(
@@ -623,7 +627,7 @@ def _ngram_collapse(df: DataFrame, k: int = 3, block_col: str = "lang",
                 F.transform(shingles_col(tokens_col(text_col), k), _shingle_base_hash)
             ).alias("sh"),
         )
-        .localCheckpoint(eager=True)
+        .transform(_truncate_eager)
     )
     members = mapped.select(F.col(key_col), F.col("_rep").alias("rep"), "block", "_fp")
     return reps_sh, members
@@ -643,7 +647,7 @@ def _ngram_sets_uncollapsed(df: DataFrame, k: int = 3, block_col: str = "lang",
                 F.transform(shingles_col(tokens_col(text_col), k), _shingle_base_hash)
             ).alias("sh"),
         )
-        .localCheckpoint(eager=True)
+        .transform(_truncate_eager)
     )
 
 
@@ -693,7 +697,7 @@ def ngram_r1_candidates(reps_sh: DataFrame, key_col: str = "doc_id") -> DataFram
     )
     # both self-join sides read ONE materialized band table instead of
     # re-running the shingle -> 32-min pipeline per side
-    r1 = r1.localCheckpoint(eager=True)
+    r1 = r1.transform(_truncate_eager)
     a, b = r1.alias("a"), r1.alias("b")
     return (
         a.join(
@@ -1064,7 +1068,7 @@ def _simhash_rep_pairs(df: DataFrame, max_hamming: int = 3
     ).select("doc_id", "simhash", F.col("cc.chunk").alias("chunk"), F.col("cc.val").alias("val"))
     # one materialized chunk table for both self-join sides (the md5 token
     # walk behind simhash_col is the expensive stage)
-    chunks = chunks.localCheckpoint(eager=True)
+    chunks = chunks.transform(_truncate_eager)
     a, b = chunks.alias("a"), chunks.alias("b")
     hamming = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
     rep_pairs = (
@@ -1210,7 +1214,7 @@ def embedding_lsh_candidates(em: DataFrame,
     # both self-join sides read ONE materialized bucket table — without
     # this the 64-plane signature projection runs once per side (the same
     # shared-working-set rule as every band join in this module)
-    bk = bk.localCheckpoint(eager=True)
+    bk = bk.transform(_truncate_eager)
     a, b = bk.alias("a"), bk.alias("b")
     return (
         a.join(
@@ -1496,7 +1500,7 @@ def setsim_prefix_join(docs: DataFrame, text_col: str = "text",
     # — the dominant per-row cost on natural text — executes three times
     sets = reps.select(
         F.col(key_col), shingles_col(tokens_col(text_col)).alias("s")
-    ).localCheckpoint(eager=False)
+    ).transform(_truncate)
     ex = sets.select(key_col, F.explode("s").alias("sh"))
     dfreq = ex.groupBy("sh").agg(F.count(F.lit(1)).alias("df"))
     ordered = (

@@ -38,6 +38,9 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession
 
+from covid_19_data_engineering_spark.operators.lineage import (
+    truncate_eager as _truncate_eager,
+)
 from covid_19_data_engineering_spark.plans.registry import register
 from covid_19_data_engineering_spark.sources.tables import load_table
 
@@ -98,15 +101,15 @@ def dsir_log_weights(raw: DataFrame, target: DataFrame,
     # the raw gram explode (the corpus-sized stage) feeds BOTH the raw
     # bucket distribution and the per-doc scoring — materialize it once
     raw_grams = doc_gram_buckets(raw, n_buckets=n_buckets) \
-        .localCheckpoint(eager=True)
+        .transform(_truncate_eager)
     # the bucket tables are n_buckets rows — materialize once; their
     # totals are two scalars, collected as bounded O(1) literals (avoids a
     # self-lineage crossJoin of t with its own aggregate)
     t = _bucket_dist(doc_gram_buckets(target, n_buckets=n_buckets),
                      n_buckets).select(
-        "b", F.col("n").alias("nt")).localCheckpoint(eager=True)
+        "b", F.col("n").alias("nt")).transform(_truncate_eager)
     r = _bucket_dist(raw_grams, n_buckets).select(
-        "b", F.col("n").alias("nr")).localCheckpoint(eager=True)
+        "b", F.col("n").alias("nr")).transform(_truncate_eager)
     n_t = t.agg(F.sum("nt")).first()[0] or 0
     n_r = r.agg(F.sum("nr")).first()[0] or 0
     ratio = (

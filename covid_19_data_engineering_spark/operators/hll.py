@@ -41,6 +41,9 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from covid_19_data_engineering_spark.operators.lineage import (
+    truncate_eager as _truncate_eager,
+)
 from covid_19_data_engineering_spark.plans.registry import register
 from covid_19_data_engineering_spark.sources.tables import load_table
 
@@ -288,7 +291,7 @@ def events_user_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
 def events_hll_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, "events", sf_dir)
     regs = hll_registers(events, "event_type", "user_id") \
-        .localCheckpoint(eager=True)
+        .transform(_truncate_eager)
     singles = hll_estimate(regs, "event_type")
     types = regs.select("event_type").distinct()
     pairs = (

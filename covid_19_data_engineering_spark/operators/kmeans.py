@@ -23,12 +23,14 @@ Determinism across engines (the driver value-hashes against DuckDB):
 - Per-member distances aggregate the same way (1e-9 units).
 
 Scale shape: assignment is a **map-only projection against a broadcast
-centroid array** (no shuffle, no per-centroid row explosion — the argmin
-is ``array_min`` over K struct elements computed inside one whole-stage
-codegen projection). The update shuffles on (cluster, dim) — at most
-K x 64 groups, crushed by map-side partial aggregation regardless of
-corpus size. That is exactly how distributed k-means is built on a
-1000-executor cluster; only the number of rounds changes.
+centroid array** — the shared nearest-centroid kernel
+(``operators/vectors.py`` ``nearest_centroids``, one ``array_min`` over
+K struct elements inside one whole-stage codegen projection; no shuffle,
+no per-centroid row explosion). The update (``lloyd_update``) shuffles
+on (cluster, dim) — at most K x 64 groups, crushed by map-side partial
+aggregation regardless of corpus size. That is exactly how distributed
+k-means is built on a 1000-executor cluster; only the number of rounds
+changes.
 """
 
 from __future__ import annotations
@@ -36,12 +38,16 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession
 
+from covid_19_data_engineering_spark.operators.vectors import (
+    COORD_UNIT,
+    lloyd_update,
+    nearest_centroids,
+)
 from covid_19_data_engineering_spark.plans.registry import register
 from covid_19_data_engineering_spark.sources.tables import load_table
 
 KM_K = 8
 KM_DIM = 64
-COORD_UNIT = 1_000_000        # centroid fixed-point: 1e-6
 DIST_UNIT = 1_000_000_000     # distance fixed-point: 1e-9
 
 
@@ -52,58 +58,37 @@ def _sqdist(a: Column, b: Column) -> Column:
     )
 
 
-def _assign(corpus: DataFrame, cents: DataFrame) -> DataFrame:
-    """Map-only assignment: broadcast the K centroids as ONE array-of-structs
-    row; argmin = array_min over (dist, cid) structs, computed in a single
-    codegen projection. Output: (vec_id, e, cid, dist)."""
-    carr = cents.agg(F.collect_list(F.struct("cid", "c")).alias("cs"))
-    best = F.array_min(
-        F.transform(
-            F.col("cs"),
-            lambda c: F.struct(
-                _sqdist(F.col("e"), c["c"]).alias("dist"),
-                c["cid"].alias("cid"),
-            ),
-        )
-    )
-    return (
-        corpus.crossJoin(F.broadcast(carr))
-        .select("vec_id", "e", best.alias("best"))
-        .select("vec_id", "e", F.col("best.cid").alias("cid"),
-                F.col("best.dist").alias("dist"))
-    )
-
-
 def kmeans_assignments(emb: DataFrame, k: int = KM_K) -> DataFrame:
     """Two-round deterministic Lloyd assignment: (vec_id, e, cid, dist)
     after assign -> integer-exact centroid update -> reassign. The shared
     partitioning stage behind the cluster-stats query and semantic dedup
-    (operators/semdedup.py). emb: (vec_id, embedding array<float>)."""
+    (operators/semdedup.py). emb: (vec_id, embedding array<float>).
+    Each assignment broadcasts the K centroids as ONE array-of-structs
+    row."""
     corpus = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
     cent0 = (
         corpus.orderBy("vec_id").limit(k)
         .select(F.col("vec_id").alias("cid"), F.col("e").alias("c"))
     )
-    a1 = _assign(corpus, cent0)
-    upd = (
-        a1.select("cid", F.posexplode("e").alias("pos", "val"))
-        .groupBy("cid", "pos")
-        .agg(
-            F.sum(F.floor(F.col("val") * COORD_UNIT)).alias("su"),
-            F.count("*").alias("cnt"),
+
+    def assign(cents: DataFrame) -> DataFrame:
+        carr = cents.agg(F.collect_list(F.struct("cid", "c")).alias("cs"))
+        best = nearest_centroids(F.col("e"), F.col("cs"), _sqdist, 1)
+        return (
+            corpus.crossJoin(F.broadcast(carr))
+            .select("vec_id", "e", best.alias("best"))
+            .select("vec_id", "e", F.col("best.cid").alias("cid"),
+                    F.col("best.dist").alias("dist"))
         )
-        .select(
-            "cid", "pos",
-            (F.col("su").cast("double") / F.col("cnt") / COORD_UNIT).alias("coord"),
-        )
-    )
-    cent1 = upd.groupBy("cid").agg(
-        F.transform(
-            F.sort_array(F.collect_list(F.struct("pos", "coord"))),
-            lambda s: s["coord"],
-        ).alias("c")
-    )
-    return _assign(corpus, cent1)
+
+    return assign(lloyd_update(assign(cent0), ["cid"], "e"))
+
+
+def _sqdist_sql(v: str, c: str, dim: int = KM_DIM) -> str:
+    """DuckDB twin of ``_sqdist``: the same left fold in index order."""
+    return (f"list_reduce(list_transform(range(1, {dim} + 1), "
+            f"i -> ({v}[i] - {c}[i]) * ({v}[i] - {c}[i])), "
+            "(a, b) -> a + b)")
 
 
 def kmeans_stats(emb: DataFrame, k: int = KM_K) -> DataFrame:
@@ -145,11 +130,6 @@ def kmeans_cte_chain(k_expr: str = str(KM_K), emb_sql: str = _EMB_SQL_DEFAULT) -
     semantic dedup clusters its exact-embedding-collapsed representative
     set, not the raw table."""
 
-    def sqdist(v: str, c: str) -> str:
-        return (f"list_reduce(list_transform(range(1, {KM_DIM} + 1), "
-                f"i -> ({v}[i] - {c}[i]) * ({v}[i] - {c}[i])), "
-                "(a, b) -> a + b)")
-
     return f"""emb AS ({emb_sql}),
     cent0 AS (
       SELECT vec_id AS cid, e AS c FROM (
@@ -163,7 +143,7 @@ def kmeans_cte_chain(k_expr: str = str(KM_K), emb_sql: str = _EMB_SQL_DEFAULT) -
       SELECT vec_id, e, cid FROM (
         SELECT v.vec_id, v.e, c.cid,
                ROW_NUMBER() OVER (PARTITION BY v.vec_id
-                                  ORDER BY {sqdist('v.e', 'c.c')}, c.cid) AS rn
+                                  ORDER BY {_sqdist_sql('v.e', 'c.c')}, c.cid) AS rn
         FROM emb v CROSS JOIN cent0 c
       ) WHERE rn = 1
     ),
@@ -182,9 +162,9 @@ def kmeans_cte_chain(k_expr: str = str(KM_K), emb_sql: str = _EMB_SQL_DEFAULT) -
     ),
     a2 AS (
       SELECT vec_id, e, cid, dist FROM (
-        SELECT v.vec_id, v.e, c.cid, {sqdist('v.e', 'c.c')} AS dist,
+        SELECT v.vec_id, v.e, c.cid, {_sqdist_sql('v.e', 'c.c')} AS dist,
                ROW_NUMBER() OVER (PARTITION BY v.vec_id
-                                  ORDER BY {sqdist('v.e', 'c.c')}, c.cid) AS rn
+                                  ORDER BY {_sqdist_sql('v.e', 'c.c')}, c.cid) AS rn
         FROM emb v CROSS JOIN cent1 c
       ) WHERE rn = 1
     )"""

@@ -22,9 +22,10 @@ Usage::
     set_reliable_checkpoint_dir(spark, None)   # restore the local default
 
 Operators call ``.transform(truncate)`` (lazy) or
-``.transform(truncate_eager)`` where they previously called
-``.localCheckpoint(...)`` — chaining-compatible, and a no-op behavior
-change while no directory is configured.
+``.transform(truncate_eager)``, never ``localCheckpoint``/``checkpoint``
+directly (tests/test_lineage_seam.py fails on a direct call), so the
+reliable posture reaches every truncation in the package. While no
+directory is configured both are exactly ``localCheckpoint``.
 
 "Lazy" is weaker than it reads under AQE (the engine default, session.py):
 ``localCheckpoint(eager=False)`` plans its subplan adaptively at call

@@ -29,6 +29,10 @@ from covid_19_data_engineering_spark.operators.dedup import (
     minhash_bands,
     minhash_pipeline_ctes,
 )
+from covid_19_data_engineering_spark.operators.lineage import (
+    truncate as _truncate,
+    truncate_eager as _truncate_eager,
+)
 from covid_19_data_engineering_spark.operators.textstats import (
     quality_score_col,
     quality_score_sql,
@@ -360,7 +364,7 @@ def boilerplate_profile(docs: DataFrame, k: int = _BOILER_K,
     # job pays it) instead of running the explode twice in one task
     grams = _spread(docs).select(
         "doc_id", F.explode(_ngrams_distinct(F.col("text"), k)).alias("gram")
-    ).localCheckpoint(eager=False)
+    ).transform(_truncate)
     gram_df = grams.groupBy("gram").agg(F.count("*").alias("df"))
     per_doc = (
         grams.join(gram_df, "gram")
@@ -651,15 +655,15 @@ def lm_bigram_scores(docs: DataFrame, text_col: str = "text",
 
     100 TB posture — the textbook CCNet two-pass shape, explicitly bounded
     at TWO corpus scans: pass 1 tokenizes once and collapses to per-doc
-    bigram counts (``docbi``), which is eagerly localCheckpoint()ed — it is
+    bigram counts (``docbi``), which is eagerly truncated — it is
     the algorithm's working set, and every downstream table (global counts,
     contexts, the scoring join) derives from the checkpoint instead of
     re-tokenizing the corpus per branch (the naive DAG re-scanned the
     corpus 4x because the broadcast probe side defeats exchange reuse);
     pass 2 is the vocabulary count. All joins are equi-keyed on (w1,w2);
     the rollup shuffles once on doc_id. Never a doc-doc self-join. On a
-    cluster swap localCheckpoint for reliable checkpoint() if executor
-    loss matters.
+    cluster, ``lineage.set_reliable_checkpoint_dir`` makes the truncate a
+    reliable checkpoint() if executor loss matters.
 
     Determinism across engines: each -ln P quantizes to an exact BIGINT
     in 1e-6 units (libm ulp differences die at the quantization), the
@@ -680,7 +684,7 @@ def lm_bigram_scores(docs: DataFrame, text_col: str = "text",
         )
         .groupBy("doc_id", "b.w1", "b.w2")
         .agg(F.count(F.lit(1)).alias("c_doc"))
-        .localCheckpoint(eager=True)
+        .transform(_truncate_eager)
     )
     cnt = docbi.groupBy("w1", "w2").agg(F.sum("c_doc").alias("c"))
     ctx = cnt.groupBy("w1").agg(F.sum("c").alias("cw"))
@@ -867,7 +871,7 @@ def ngram_novelty_profile(docs: DataFrame, k: int = 5) -> DataFrame:
     dg = _spread(docs).select(
         "doc_id", "source",
         F.explode(_ngrams_distinct(F.col("text"), k)).alias("gram"),
-    ).localCheckpoint(eager=False)
+    ).transform(_truncate)
     first = dg.groupBy("gram").agg(F.min("doc_id").alias("first_doc"))
     per_src = (
         dg.join(first, "gram")
@@ -968,7 +972,7 @@ def lm_trigram_scores(docs: DataFrame, text_col: str = "text",
         )
         .groupBy("doc_id", "g.w1", "g.w2", "g.w3")
         .agg(F.count(F.lit(1)).alias("c_doc"))
-        .localCheckpoint(eager=True)
+        .transform(_truncate_eager)
     )
     c123 = doctri.groupBy("w1", "w2", "w3").agg(F.sum("c_doc").alias("c123"))
     c12 = c123.groupBy("w1", "w2").agg(F.sum("c123").alias("c12"))
@@ -1105,7 +1109,7 @@ def lm_kneser_ney_scores(docs: DataFrame, text_col: str = "text",
         )
         .groupBy("doc_id", "b.w1", "b.w2")
         .agg(F.count(F.lit(1)).alias("c_doc"))
-        .localCheckpoint(eager=True)
+        .transform(_truncate_eager)
     )
     cnt = docbi.groupBy("w1", "w2").agg(F.sum("c_doc").alias("c"))
     ctx = cnt.groupBy("w1").agg(F.sum("c").alias("cw"),

@@ -12,10 +12,11 @@ floating-point vector math at all.
 
 Engine mapping (everything deterministic, oracle-replayable):
 
-- codebooks reuse the deterministic Lloyd machinery from
-  operators/kmeans.py VERBATIM per subspace (lowest-vec_id init, exact
-  left-fold squared-L2, fixed-point integer centroid update, min-cid
-  ties) — the same cross-engine determinism argument;
+- codebooks reuse the deterministic Lloyd machinery per subspace
+  (lowest-vec_id init, exact left-fold squared-L2, the shared
+  ``nearest_centroids`` argmin with min-cid ties and ``lloyd_update``
+  fixed-point centroid update from operators/vectors.py) — the same
+  cross-engine determinism argument as operators/kmeans.py;
 - encoding + ADC run in ONE map-only projection: the M codebooks (each
   centroid carrying its PRECOMPUTED query distance) broadcast as M
   array-of-struct rows; per corpus vector, argmin per subspace yields
@@ -34,8 +35,8 @@ Two registered operators share the machinery:
   audit operator. On the unstructured synthetic corpus its top-10 is
   mostly quantization noise (documented; the planted-cluster pytest
   pins where coarse ADC structure IS preserved).
-- ``ann_pq_rerank_topk`` — the production query path (round-12 verdict
-  #1; Jegou et al. §IV-B): ADC selects a SHORTLIST of 10x k candidates
+- ``ann_pq_rerank_topk`` — the production query path (Jegou et al.
+  §IV-B): ADC selects a SHORTLIST of 10x k candidates
   map-only, then the exact squared-L2 re-ranks only those rows. A finer
   quantizer (M=16 x 4 dims, K=64 — still M bytes/vector at log2(K)<=8)
   makes the shortlist reliable: measured shortlist recall@10 vs exact
@@ -60,9 +61,14 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 
 from covid_19_data_engineering_spark.operators.kmeans import (
-    COORD_UNIT,
     DIST_UNIT,
     _sqdist,
+    _sqdist_sql,
+)
+from covid_19_data_engineering_spark.operators.vectors import (
+    COORD_UNIT,
+    lloyd_update,
+    nearest_centroids,
 )
 from covid_19_data_engineering_spark.plans.registry import register
 from covid_19_data_engineering_spark.sources.tables import load_table
@@ -93,11 +99,10 @@ def _adc_scored(emb: DataFrame, q: list, m: int, subdim: int,
 
     All m per-subspace codebooks train in ONE exploded pass (a row per
     (vector, subspace)), so the whole training phase is a constant
-    number of small (s, cid, pos)-keyed shuffles REGARDLESS of m — the
-    original per-subspace chain paid 2 shuffles x m subspaces, and at
-    m=16 the ~32 AQE'd micro-stages were pure plan latency (~10s wall
-    on kilobyte data). Arithmetic is bit-identical to the chain form
-    the oracle replays: same lowest-vec_id init, same (dist, cid)
+    number of small (s, cid, pos)-keyed shuffles REGARDLESS of m; a
+    per-subspace chain would pay 2 shuffles x m subspaces of pure plan
+    latency. Arithmetic is bit-identical to the chain form the oracle
+    replays: same lowest-vec_id init, same (dist, cid)
     struct-min assignment, same integer-exact centroid update, and the
     final ADC sum folds d0+d1+...+d(m-1) left-associatively in subspace
     order (F.aggregate from 0.0; 0.0 + d0 == d0 exactly for the
@@ -120,39 +125,13 @@ def _adc_scored(emb: DataFrame, q: list, m: int, subdim: int,
         .groupBy("s")
         .agg(F.collect_list(F.struct("cid", "c")).alias("cs"))
     )
-    assigned = (
-        sub.join(F.broadcast(cent0), "s")
-        .select(
-            "s", "es",
-            F.array_min(F.transform(
-                F.col("cs"),
-                lambda c: F.struct(
-                    _sqdist(F.col("es"), c["c"]).alias("dist"),
-                    c["cid"].alias("cid"),
-                ),
-            ))["cid"].alias("cid"),
-        )
+    assigned = sub.join(F.broadcast(cent0), "s").select(
+        "s", "es",
+        nearest_centroids(F.col("es"), F.col("cs"), _sqdist, 1)["cid"]
+        .alias("cid"),
     )
-    # integer-exact centroid update, keyed (s, cid, pos): one shuffle
-    # covers every subspace's codebook
-    cent1 = (
-        assigned.select("s", "cid", F.posexplode("es").alias("pos", "val"))
-        .groupBy("s", "cid", "pos")
-        .agg(
-            F.sum(F.floor(F.col("val") * COORD_UNIT)).alias("su"),
-            F.count("*").alias("cnt"),
-        )
-        .select(
-            "s", "cid", "pos",
-            (F.col("su").cast("double") / F.col("cnt") / COORD_UNIT)
-            .alias("coord"),
-        )
-        .groupBy("s", "cid")
-        .agg(F.transform(
-            F.sort_array(F.collect_list(F.struct("pos", "coord"))),
-            lambda x: x["coord"],
-        ).alias("c"))
-    )
+    # one (s, cid, pos)-keyed shuffle covers every subspace's codebook
+    cent1 = lloyd_update(assigned, ["s", "cid"], "es")
     # each centroid carries its query distance (the ADC table entry);
     # the m codebooks collapse into ONE broadcast row, sorted by s
     qslices = F.array(*[
@@ -176,15 +155,9 @@ def _adc_scored(emb: DataFrame, q: list, m: int, subdim: int,
     # distance, and the outer fold sums them in fixed subspace order
     dq_per_s = F.transform(
         F.col("books"),
-        lambda b: F.array_min(F.transform(
-            b["cs"],
-            lambda c: F.struct(
-                _sqdist(F.slice(F.col("e"), b["s"] * subdim + 1, subdim),
-                        c["c"]).alias("dist"),
-                c["cid"].alias("cid"),
-                c["dq"].alias("dq"),
-            ),
-        ))["dq"],
+        lambda b: nearest_centroids(
+            F.slice(F.col("e"), b["s"] * subdim + 1, subdim), b["cs"],
+            _sqdist, 1, "dq")["dq"],
     )
     approx = F.aggregate(dq_per_s, F.lit(0.0), lambda acc, v: acc + v)
     return (
@@ -260,9 +233,7 @@ def _pq_chain_sql(s: int, subdim: int = PQ_SUBDIM,
     lo, hi = s * subdim + 1, (s + 1) * subdim
 
     def sqd(v: str, c: str) -> str:
-        return (f"list_reduce(list_transform(range(1, {subdim} + 1), "
-                f"i -> ({v}[i] - {c}[i]) * ({v}[i] - {c}[i])), "
-                "(a, b) -> a + b)")
+        return _sqdist_sql(v, c, subdim)
 
     return f"""s{s}_emb AS (
       SELECT vec_id, list_slice(e, {lo}, {hi}) AS e FROM corpus
@@ -416,7 +387,7 @@ def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ann_pq_rerank_topk",
     oracle=_pq_rerank_oracle_sql(),
-    doc="PQ ANN with exact re-rank (round-12 verdict #1; Jegou et al. "
+    doc="PQ ANN with exact re-rank (Jegou et al. "
     f"§IV-B): a finer {PQR_M}x{PQR_SUBDIM}-dim / {PQR_K}-centroid ADC "
     f"pass selects a {PQR_SHORTLIST}-row shortlist map-only, then the "
     f"exact squared-L2 re-ranks ONLY those rows and keeps the top "

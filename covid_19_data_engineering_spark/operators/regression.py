@@ -23,6 +23,9 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from covid_19_data_engineering_spark.operators.lineage import (
+    truncate as _truncate,
+)
 from covid_19_data_engineering_spark.plans.registry import register
 from covid_19_data_engineering_spark.sources.tables import load_table
 
@@ -308,7 +311,7 @@ def theil_sen_daily(orders: DataFrame, year: int = _TS_YEAR) -> DataFrame:
                    "DATE '1970-01-01') AS BIGINT)").alias("x"))
         .agg(F.sum(F.expr("CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)"))
              .alias("y"))
-        .localCheckpoint(eager=False)  # feeds the pair join twice + counts
+        .transform(_truncate)  # feeds the pair join twice + counts
     )
     a = daily.select(F.col("x").alias("xi"), F.col("y").alias("yi"))
     b = daily.select(F.col("x").alias("xj"), F.col("y").alias("yj"))
@@ -476,7 +479,7 @@ def mann_kendall_daily(orders: DataFrame, year: int = _TS_YEAR) -> DataFrame:
                    "DATE '1970-01-01') AS BIGINT)").alias("x"))
         .agg(F.sum(F.expr("CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)"))
              .alias("y"))
-        .localCheckpoint(eager=False)  # feeds pairs, ties, and the count
+        .transform(_truncate)  # feeds pairs, ties, and the count
     )
     a = daily.select(F.col("x").alias("xi"), F.col("y").alias("yi"))
     b = daily.select(F.col("x").alias("xj"), F.col("y").alias("yj"))
@@ -845,7 +848,7 @@ def seasonal_mann_kendall(orders: DataFrame) -> DataFrame:
             F.expr("month(CAST(o_orderdate AS DATE))").alias("mo"))
         .agg(F.sum(F.expr("CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)"))
              .alias("y"))
-        .localCheckpoint(eager=False)  # feeds pairs, ties, season sizes
+        .transform(_truncate)  # feeds pairs, ties, season sizes
     )
     a = monthly.select(F.col("mo").alias("ma"), F.col("yr").alias("yi"),
                        F.col("y").alias("vi"))
@@ -982,7 +985,7 @@ def pettitt_changepoint(orders: DataFrame,
                    "DATE '1970-01-01') AS BIGINT)").alias("x"))
         .agg(F.sum(F.expr("CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)"))
              .alias("y"))
-        .localCheckpoint(eager=False)  # feeds the pair join twice + count
+        .transform(_truncate)  # feeds the pair join twice + count
     )
     a = daily.select(F.col("x").alias("xi"), F.col("y").alias("yi"))
     b = daily.select(F.col("x").alias("xj"), F.col("y").alias("yj"))

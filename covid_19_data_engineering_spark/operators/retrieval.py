@@ -27,6 +27,9 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 
+from covid_19_data_engineering_spark.operators.lineage import (
+    truncate as _truncate,
+)
 from covid_19_data_engineering_spark.operators.vectors import fold_cosine_sql
 from covid_19_data_engineering_spark.plans.registry import register
 from covid_19_data_engineering_spark.sources.tables import load_table
@@ -616,7 +619,7 @@ def mmr_select(emb: DataFrame, query_vec: list, k: int = MMR_K) -> DataFrame:
     cands = emb.select(
         "vec_id", "e",
         F.round(cosine_sim(F.col("e"), qlit), 6).alias("rel"),
-    ).withColumn("runmax", F.lit(0.0)).localCheckpoint(eager=False)
+    ).withColumn("runmax", F.lit(0.0)).transform(_truncate)
     picked_rows = []
     for rank in range(1, k + 1):
         score = F.round(
@@ -642,7 +645,7 @@ def mmr_select(emb: DataFrame, query_vec: list, k: int = MMR_K) -> DataFrame:
                     F.round(cosine_sim(F.col("e"), plit), 6),
                 ),
             )
-            .localCheckpoint(eager=False)  # O(1) plan per round
+            .transform(_truncate)  # O(1) plan per round
         )
     spark = emb.sparkSession
     return spark.createDataFrame(

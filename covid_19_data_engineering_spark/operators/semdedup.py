@@ -11,16 +11,16 @@ K = max(8, n / SEM_CLUSTER_TARGET) — identical integer arithmetic in
 the oracle's cent0 CTE — capping EXPECTED cluster size at any scale
 (measured: the fixed-K variant ran 4.8x at 3x data; capped runs ~1x).
 
-Round 6 closes the two worst-case holes the expectation argument left
-open (round-5 verdict #3):
+Two guards close the worst-case holes the expectation argument leaves
+open:
 
 1. **Exact-embedding collapse first.** A dense mode of IDENTICAL
    vectors — exactly the data semantic dedup exists to find — lands its
-   m copies in ONE k-means cell no matter how K is derived, and the old
-   within-cluster join paid C(m, 2) cosine pairs for answers that are
-   all trivially 1.0. Identical embeddings now collapse to their
-   min-vec_id representative BEFORE clustering (the round-4 minhash /
-   simhash collapse lesson applied to vectors); the expansion
+   m copies in ONE k-means cell no matter how K is derived, and a
+   within-cluster join would pay C(m, 2) cosine pairs for answers that
+   are all trivially 1.0. Identical embeddings collapse to their
+   min-vec_id representative BEFORE clustering (the minhash / simhash
+   collapse applied to vectors); the expansion
    reconstructs each copy's row exactly (status='drop_semantic',
    dup_of = the representative's dominator if the representative is
    itself dropped else the representative, max_cosine = 1.0). The
@@ -33,8 +33,8 @@ open (round-5 verdict #3):
    to the duplicate-free ones (tools/bench_scale.py).
 
 2. **Hard per-cell cap via hyperplane bit-slice split.** K bounds the
-   EXPECTED cell size; nothing bounded the max. Cells whose member
-   count exceeds SEM_CLUSTER_CAP now split on the sign bits of the
+   EXPECTED cell size, not the max. Cells whose member
+   count exceeds SEM_CLUSTER_CAP split on the sign bits of the
    shared deterministic hyperplane pool (operators/vectors.py — the
    same integer-mix planes the LSH oracles already replay
    bit-identically in DuckDB): split_bits = ceil(log2(cnt / CAP))
@@ -59,10 +59,11 @@ coarse centroids (a sqrt-sized broadcast, map-only argmin), then per
 coarse cell K2_c = ceil(cnt_c / SEM_CLUSTER_TARGET) fine centroids
 seeded from the cell's lowest vec_ids and DISTRIBUTED BY JOIN on the
 coarse cell id — no monolithic broadcast anywhere, assignment cost
-~2 n sqrt(K). Fine cells target the same 256 expected members, and the
-same collapse / cap / decision tail runs unchanged (cell id =
-'coarse:fine' string). Round 9 CONVERGES the fine quantizer (round-8
-shipped exactly one Lloyd round): assign -> integer-exact update
+~2 n sqrt(K). Both levels use the shared ``nearest_centroids`` argmin
+and the fine level the shared ``lloyd_update`` (operators/vectors.py).
+Fine cells target the same 256 expected members, and the same
+collapse / cap / decision tail runs unchanged (cell id = 'coarse:fine'
+string). The fine quantizer CONVERGES: assign -> integer-exact update
 iterates up to SEM_IVF_LLOYD_ROUNDS rounds, freezing when the largest
 per-centroid squared movement (exact fixed point) drops below
 SEM_IVF_MOVE_EPS_FP — "until movement < eps or R rounds" as a fixed
@@ -100,14 +101,20 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from covid_19_data_engineering_spark.operators.kmeans import (
     KM_DIM,
     KM_K,
-    _assign,
     _sqdist,
+    _sqdist_sql,
     kmeans_assignments,
     kmeans_cte_chain,
 )
+from covid_19_data_engineering_spark.operators.lineage import (
+    truncate as _truncate,
+)
 from covid_19_data_engineering_spark.operators.vectors import (
+    COORD_UNIT,
     _planes_lit,
     fold_cosine_sql,
+    lloyd_update,
+    nearest_centroids,
 )
 from covid_19_data_engineering_spark.plans.registry import register
 from covid_19_data_engineering_spark.sources.tables import load_table
@@ -133,7 +140,7 @@ SEM_CLUSTER_TARGET = 256
 SEM_CLUSTER_CAP = 512
 SEM_MAX_SPLIT_BITS = 8
 
-# fine-quantizer Lloyd budget (round-9 verdict #2): the IVF fine
+# fine-quantizer Lloyd budget: the IVF fine
 # assignment iterates assign -> integer-exact update for up to
 # SEM_IVF_LLOYD_ROUNDS rounds, FREEZING early when the largest
 # per-centroid squared movement between consecutive rounds drops below
@@ -150,7 +157,7 @@ SEM_IVF_LLOYD_ROUNDS = 2
 SEM_IVF_MOVE_UNIT = 1_000_000_000_000   # 1e-12 fixed point for movement^2
 SEM_IVF_MOVE_EPS_FP = 1_000_000         # < 1e-6 squared movement = converged
 
-# partition="auto" switch point (round-7 verdict #4): the flat quantizer
+# partition="auto" switch point: the flat quantizer
 # broadcasts all K = n/256 centroids to every task and pays n*K
 # multiply-adds, so it stops being the right plan once K crosses ~1024
 # centroids (at 768-dim production vectors that is a multi-MB broadcast
@@ -205,10 +212,9 @@ def _cap_rank_cells(assigned: DataFrame) -> DataFrame:
     )
     celled = counted.withColumn("_s", s).withColumn("sub", sub)
     rank_w = Window.partitionBy("cell", "sub").orderBy("dist", "vec_id")
-    # hoist each vector's norm out of the pair stage (the round-5
-    # embedding-dedup lesson): dot/(na*nb) with per-vector norms is the
-    # SAME operand tree as cosine_sim per pair, at one array walk instead
-    # of three
+    # hoist each vector's norm out of the pair stage: dot/(na*nb) with
+    # per-vector norms is the SAME operand tree as cosine_sim per pair,
+    # at one array walk instead of three
     norm = F.sqrt(
         F.aggregate(
             F.transform(F.col("e"), lambda x: (x * x).cast("double")),
@@ -234,77 +240,17 @@ def _rep_cells(reps: DataFrame, k: int) -> DataFrame:
     return _cap_rank_cells(assigned)
 
 
-def _fine_assign(members: DataFrame, farr: DataFrame) -> DataFrame:
-    """Assign each member to its nearest fine centroid WITHIN its coarse
-    cell — distributed by an equi-join on ccid (never a monolithic
-    broadcast); argmin over struct(dist, fcid) inside one codegen
-    projection. Output: (vec_id, e, ccid, fcid, dist)."""
-    best = F.array_min(
-        F.transform(
-            F.col("fs"),
-            lambda f: F.struct(
-                _sqdist(F.col("e"), f["fc"]).alias("dist"),
-                f["fcid"].alias("fcid"),
-            ),
-        )
-    )
-    return (
-        members.join(farr, "ccid")
-        .select("vec_id", "e", "ccid", best.alias("best"))
-        .select("vec_id", "e", "ccid",
-                F.col("best.fcid").alias("fcid"),
-                F.col("best.dist").alias("dist"))
-    )
-
-
-def _fine_update(fa: DataFrame) -> DataFrame:
-    """Lloyd update over a fine assignment, (ccid, fcid, pos)-keyed: at
-    most K x dim groups, the identical su/cnt fixed-point arithmetic as
-    kmeans cent1 (exact on both engines); empty fine cells simply vanish
-    and each coarse cell keeps >= 1 centroid (it had >= 1 member).
-    Output: (ccid, fcid, fc)."""
-    from covid_19_data_engineering_spark.operators.kmeans import COORD_UNIT
-
-    fupd = (
-        fa.select("ccid", "fcid", F.posexplode("e").alias("pos", "val"))
-        .groupBy("ccid", "fcid", "pos")
-        .agg(
-            F.sum(F.floor(F.col("val") * COORD_UNIT)).alias("su"),
-            F.count("*").alias("cnt"),
-        )
-        .select(
-            "ccid", "fcid", "pos",
-            (F.col("su").cast("double") / F.col("cnt") / COORD_UNIT)
-            .alias("coord"),
-        )
-    )
-    return fupd.groupBy("ccid", "fcid").agg(
-        F.transform(
-            F.sort_array(F.collect_list(F.struct("pos", "coord"))),
-            lambda s: s["coord"],
-        ).alias("fc")
-    )
-
-
-def _fine_arr(fcent: DataFrame) -> DataFrame:
-    """One array of fine centroids per coarse cell, distributed by join —
-    argmin over struct(dist, fcid) is order-independent, so the
-    collect_list order does not matter."""
-    return fcent.groupBy("ccid").agg(
-        F.collect_list(F.struct("fcid", "fc")).alias("fs"))
-
-
 def _max_centroid_movement(new: DataFrame, old: DataFrame) -> DataFrame:
     """One-row (mx): the largest per-centroid squared movement between
-    two consecutive fine-centroid tables, in exact SEM_IVF_MOVE_UNIT
-    fixed point — each squared-diff term floors to a BIGINT before the
-    fold, so the per-centroid sum is order-independent and the
-    < EPS freeze comparison is a pure integer decision both engines
-    compute identically. Vanished cells (present in old only) move
+    two consecutive (ccid, fcid, c) centroid tables, in exact
+    SEM_IVF_MOVE_UNIT fixed point — each squared-diff term floors to a
+    BIGINT before the fold, so the per-centroid sum is order-independent
+    and the < EPS freeze comparison is a pure integer decision both
+    engines compute identically. Vanished cells (present in old only) move
     nothing by definition and are excluded by the inner join."""
     move = F.aggregate(
         F.zip_with(
-            F.col("fc"), F.col("_fc_old"),
+            F.col("c"), F.col("_c_old"),
             lambda x, y: F.floor(
                 ((x - y) * (x - y)) * F.lit(float(SEM_IVF_MOVE_UNIT))
                 + F.lit(0.5)).cast("long"),
@@ -312,7 +258,7 @@ def _max_centroid_movement(new: DataFrame, old: DataFrame) -> DataFrame:
         F.lit(0).cast("long"), lambda acc, v: acc + v,
     )
     return (
-        new.join(old.select("ccid", "fcid", F.col("fc").alias("_fc_old")),
+        new.join(old.select("ccid", "fcid", F.col("c").alias("_c_old")),
                  ["ccid", "fcid"])
         .select(move.alias("m"))
         .agg(F.coalesce(F.max("m"), F.lit(0).cast("long")).alias("mx"))
@@ -325,11 +271,9 @@ def _ivf_assigned(reps: DataFrame, n_reps: int,
     """Two-level partition: K1 = ceil(sqrt(K_total)) broadcast coarse
     centroids (single-round argmin), then per-coarse-cell fine centroids
     seeded from the cell's lowest vec_ids and refined with up to
-    ``lloyd_rounds`` Lloyd rounds (the same integer-exact fixed-point
-    centroid update as the flat quantizer's kmeans, keyed by
+    ``lloyd_rounds`` Lloyd rounds (``lloyd_update`` keyed by
     (coarse, fine)), distributed BY JOIN on the coarse id — no K-row
-    broadcast anywhere. Round 9 converges the quantizer (round-8 left
-    exactly one round): after each round the largest per-centroid
+    broadcast anywhere. After each round the largest per-centroid
     squared movement is measured in exact fixed point, and once it
     drops below SEM_IVF_MOVE_EPS_FP the centroids FREEZE — every later
     round is an exact no-op — so 'iterate until movement < eps or R
@@ -342,10 +286,13 @@ def _ivf_assigned(reps: DataFrame, n_reps: int,
     corpus = reps.select("vec_id", "e")
     c0 = (
         corpus.orderBy("vec_id").limit(k1)
-        .select(F.col("vec_id").alias("cid"), F.col("e").alias("c"))
+        .agg(F.collect_list(F.struct(F.col("vec_id").alias("cid"),
+                                     F.col("e").alias("c"))).alias("cs"))
     )
-    coarse = _assign(corpus, c0).select(
-        "vec_id", "e", F.col("cid").alias("ccid"))
+    coarse = corpus.crossJoin(F.broadcast(c0)).select(
+        "vec_id", "e",
+        nearest_centroids(F.col("e"), F.col("cs"), _sqdist, 1)["cid"]
+        .alias("ccid"))
     cnt_w = Window.partitionBy("ccid")
     rn_w = Window.partitionBy("ccid").orderBy("vec_id")
     seeded = coarse \
@@ -354,24 +301,39 @@ def _ivf_assigned(reps: DataFrame, n_reps: int,
     seeds = seeded.where(
         F.col("_crn") <= F.expr(
             f"(_ccnt + {SEM_CLUSTER_TARGET} - 1) div {SEM_CLUSTER_TARGET}")
-    ).select("ccid", F.col("vec_id").alias("fcid"), F.col("e").alias("fc"))
-    # every Lloyd round re-reads the member set; checkpoint the coarse
+    ).select("ccid", F.col("vec_id").alias("fcid"), F.col("e").alias("c"))
+    # every Lloyd round re-reads the member set; truncate the coarse
     # stage ONCE (O(n) working set, the same rule as the flat path's
-    # cells checkpoint) so rounds cost one K-row update each instead of
+    # cells truncate) so rounds cost one K-row update each instead of
     # re-running collapse -> coarse-assign -> windows per round. All the
-    # round checkpoints are LAZY: each materializes inside the next
+    # round truncates are LAZY: each materializes inside the next
     # round's movement-probe job instead of paying a dedicated job —
     # the whole convergence loop adds exactly (rounds - 1) jobs
-    members = seeded.select("vec_id", "e", "ccid") \
-        .localCheckpoint(eager=False)
+    members = seeded.select("vec_id", "e", "ccid").transform(_truncate)
+
+    def assign(fcent: DataFrame) -> DataFrame:
+        # members meet their coarse cell's fine centroids by an equi-join
+        # on ccid; the argmin is order-independent, so the collect_list
+        # order does not matter
+        fs = fcent.groupBy("ccid").agg(F.collect_list(F.struct(
+            F.col("fcid").alias("cid"), "c")).alias("cs"))
+        best = nearest_centroids(F.col("e"), F.col("cs"), _sqdist, 1)
+        return (
+            members.join(fs, "ccid")
+            .select("vec_id", "e", "ccid", best.alias("best"))
+            .select("vec_id", "e", "ccid", F.col("best.cid").alias("fcid"),
+                    F.col("best.dist").alias("dist"))
+        )
+
     # round 1: unconditional update off the seeded Voronoi assignment;
-    # the centroid table is K-row small — checkpointing it per round
-    # keeps the round-over-round plan depth constant
-    fcent = _fine_update(_fine_assign(members, _fine_arr(seeds))) \
-        .localCheckpoint(eager=False)
+    # empty fine cells vanish and each coarse cell keeps >= 1 centroid
+    # (it had >= 1 member). The centroid table is K-row small —
+    # truncating it per round keeps the round-over-round plan depth
+    # constant
+    keys = ["ccid", "fcid"]
+    fcent = lloyd_update(assign(seeds), keys, "e").transform(_truncate)
     for _ in range(max(0, lloyd_rounds - 1)):
-        raw = _fine_update(_fine_assign(members, _fine_arr(fcent))) \
-            .localCheckpoint(eager=False)
+        raw = lloyd_update(assign(fcent), keys, "e").transform(_truncate)
         # the freeze is a single exact-integer scalar (bounded 1-row
         # collect); the oracle replays the identical comparison as
         # guarded mutually exclusive UNION branches per round
@@ -379,7 +341,7 @@ def _ivf_assigned(reps: DataFrame, n_reps: int,
         if mx < SEM_IVF_MOVE_EPS_FP:
             break  # converged: later rounds would be exact no-ops
         fcent = raw
-    return _fine_assign(members, _fine_arr(fcent)).select(
+    return assign(fcent).select(
         "vec_id", "e",
         F.concat(F.col("ccid").cast("string"), F.lit(":"),
                  F.col("fcid").cast("string")).alias("cell"),
@@ -481,11 +443,10 @@ def semantic_dedup(emb: DataFrame, threshold: float = SEM_THRESHOLD,
     flat, 'coarse:fine' ivf) so the switch never changes the schema."""
     withrep = _collapse_embeddings(emb)
     # feeds the rep filter, the k-derivation count, and the expansion —
-    # materialize the collapse shuffle once. LAZY since round 14: the
-    # k-derivation count below is the first consumer, so the checkpoint
-    # materializes inside that job instead of paying a dedicated one
-    # (the label-loop pattern).
-    withrep = withrep.localCheckpoint(eager=False)
+    # materialize the collapse shuffle once. LAZY: the k-derivation count
+    # below is the first consumer, so the truncate materializes inside
+    # that job instead of paying a dedicated one.
+    withrep = withrep.transform(_truncate)
     reps = withrep.where(F.col("vec_id") == F.col("rep")).select("vec_id", "e")
     n_reps = reps.count()
     if partition == "auto":
@@ -502,9 +463,9 @@ def semantic_dedup(emb: DataFrame, threshold: float = SEM_THRESHOLD,
         raise ValueError(f"unknown partition {partition!r}")
     # the cell working set feeds both self-join sides and the final
     # spine — materialize it once (same shared-working-set rule as every
-    # band join; lazy since round 14 — the pair join's first job
-    # materializes it, no dedicated blocking job)
-    cells = cells.localCheckpoint(eager=False)
+    # band join; lazy — the pair join's first job materializes it, no
+    # dedicated blocking job)
+    cells = cells.transform(_truncate)
     return _decide_and_expand(withrep, cells, threshold)
 
 
@@ -614,14 +575,13 @@ def _ivf_chain_sql() -> str:
     Round 1 replays the engine's unconditional Lloyd update off the
     seeded Voronoi assignment with the identical su/cnt fixed-point
     arithmetic as the flat kmeans chain; rounds 2..SEM_IVF_LLOYD_ROUNDS
-    replay the round-9 convergence protocol — fmove_r computes the max
+    replay the convergence protocol — fmove_r computes the max
     per-centroid squared movement in exact SEM_IVF_MOVE_UNIT fixed point
     and fcent_r keeps the PREVIOUS centroids when it is below
     SEM_IVF_MOVE_EPS_FP (guarded mutually exclusive UNION branches, the
     same replay idiom as the flat/IVF auto switch)."""
     t = SEM_CLUSTER_TARGET
     sq = _sqdist_sql
-    from covid_19_data_engineering_spark.operators.kmeans import COORD_UNIT
 
     head = f"""reps AS MATERIALIZED (SELECT vec_id, e FROM withrep WHERE vec_id = rep),
     c0 AS (
@@ -768,12 +728,6 @@ def _semantic_dedup_auto_oracle_sql(flat_max_reps: int | None = None) -> str:
     ),
     {_sem_tail_sql()}
     """
-
-
-def _sqdist_sql(v: str, c: str) -> str:
-    return (f"list_reduce(list_transform(range(1, {KM_DIM} + 1), "
-            f"i -> ({v}[i] - {c}[i]) * ({v}[i] - {c}[i])), "
-            "(a, b) -> a + b)")
 
 
 @register(

@@ -11,6 +11,11 @@ Two paths, same contract (query vectors -> top-k neighbors by cosine):
   candidates restricted to matching buckets, exact cosine re-rank on the
   candidate set. Sub-linear candidate generation; recall measured against the
   brute path in tests/test_extensions.py.
+- IVF: a deterministic coarse quantizer; corpus rows and queries find
+  their nearest cells with the shared map-only ``nearest_centroids``
+  kernel (operators/vectors.py) against a broadcast centroid array, so
+  the corpus is never shuffled; exact cosine re-rank on the probed
+  cells.
 
 Cosine math is pure JVM (zip_with/aggregate) — no Python UDF in the hot path.
 """
@@ -20,12 +25,16 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 
+from covid_19_data_engineering_spark.operators.lineage import (
+    truncate_eager as _truncate_eager,
+)
 from covid_19_data_engineering_spark.operators.vectors import (
     fold_cosine_sql,
     DIM as _VEC_DIM,
     PLANES,
     cosine_sim,
     lsh_bucket_ctes,
+    nearest_centroids,
     with_lsh_buckets,
 )
 from covid_19_data_engineering_spark.plans.registry import register
@@ -140,7 +149,7 @@ def ivf_centroids(corpus: DataFrame, k: int = _IVF_K) -> DataFrame:
         .withColumn("cid", F.row_number().over(Window.orderBy("centroid")) - 1)
     )
     # one assignment pass against broadcast seeds
-    assigned = _assign_cells(corpus, seeds, nprobe=1, id_col="vec_id")
+    assigned = _assign_cells(corpus, seeds, nprobe=1)
     # per-cell mean over float components -> refined centroids
     dim = 64
     return (
@@ -154,20 +163,22 @@ def ivf_centroids(corpus: DataFrame, k: int = _IVF_K) -> DataFrame:
 
 
 def _assign_cells(df: DataFrame, centroids: DataFrame, nprobe: int,
-                  vec_col: str = "embedding", id_col: str = "vec_id") -> DataFrame:
-    """Attach the nprobe nearest centroid ids (by cosine) to every row.
-    Centroids broadcast; ranking happens per-row with a window over the
-    small (rows x k) expansion. The window partitions on the row id only —
-    keying on every column would drag the 64-float embedding through the
-    shuffle as part of the key."""
-    scored = df.crossJoin(F.broadcast(centroids)).withColumn(
-        "_sim", cosine_sim(F.col(vec_col), F.col("centroid"))
-    )
-    w = Window.partitionBy(id_col).orderBy(F.col("_sim").desc(), F.col("cid"))
+                  vec_col: str = "embedding") -> DataFrame:
+    """Attach the nprobe nearest centroid ids (by cosine, ties to the
+    lower cid) to every row of ``df``: one row per (row, cell), ``df``'s
+    columns plus ``cid``. The centroids broadcast as ONE array row and
+    the shared kernel ranks them on the negated cosine inside the row's
+    projection — negation is exact, so (-sim, cid) ascending is the
+    oracle's ``sim DESC, cid`` order. Map-only: no window, and no column
+    of ``df`` (the 64-float vector included) is shuffled."""
+    cs = centroids.agg(F.collect_list(
+        F.struct("cid", F.col("centroid").alias("c"))).alias("_cs"))
+    best = nearest_centroids(F.col(vec_col), F.col("_cs"),
+                             lambda v, c: -cosine_sim(v, c), nprobe)
     return (
-        scored.withColumn("_rk", F.row_number().over(w))
-        .where(F.col("_rk") <= nprobe)
-        .drop("centroid", "_sim", "_rk")
+        df.crossJoin(F.broadcast(cs))
+        .select(*df.columns, best.alias("_best"))
+        .select(*df.columns, F.col("_best.cid").alias("cid"))
     )
 
 
@@ -176,18 +187,19 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = TOP_K,
     """IVF search: corpus rows live in their nearest cell (inverted file);
     each query probes its nprobe nearest cells; exact cosine re-rank on the
     cell contents. The cell equi-join prunes the pair space to
-    ~nprobe/k of the corpus per query."""
+    ~nprobe/k of the corpus per query. Candidate pairs need no distinct:
+    each vec_id sits in exactly one cell and a query's probed cids are
+    distinct, so every (query_id, vec_id) pair arrives once."""
     cents = ivf_centroids(corpus)
-    inv = _assign_cells(corpus, cents, nprobe=1, id_col="vec_id")  # inverted lists
+    inv = _assign_cells(corpus, cents, nprobe=1)  # inverted lists
     probes = _assign_cells(
         queries.select(F.col("query_id"), F.col("q_embedding")), cents,
-        nprobe=nprobe, vec_col="q_embedding", id_col="query_id",
+        nprobe=nprobe, vec_col="q_embedding",
     )
     cands = (
         inv.join(probes, "cid")
         .where(F.col("vec_id") != F.col("query_id"))
         .select("query_id", "q_embedding", "vec_id", "embedding")
-        .distinct()
     )
     scored = cands.select(
         "query_id", "vec_id",
@@ -209,15 +221,6 @@ def _ivf_ctes() -> str:
     lowest-id vectors, cid order is the lexicographic array order, one
     Lloyd step is plain AVG per component, and every argmax tie-breaks
     on cid — so SQL replays it stage by stage."""
-    def cos(a: str, b: str) -> str:
-        dot = (f"list_reduce(list_transform(range(1, {_IVF_DIM} + 1), "
-               f"i -> {a}[i] * {b}[i]), (x, y) -> x + y)")
-        na = (f"sqrt(list_reduce(list_transform(range(1, {_IVF_DIM} + 1), "
-              f"i -> {a}[i] * {a}[i]), (x, y) -> x + y))")
-        nb = (f"sqrt(list_reduce(list_transform(range(1, {_IVF_DIM} + 1), "
-              f"i -> {b}[i] * {b}[i]), (x, y) -> x + y))")
-        return f"({dot} / ({na} * {nb}))"
-
     avgs = ", ".join(f"AVG(e[{i + 1}])" for i in range(_IVF_DIM))
     return f"""
     emb AS (
@@ -231,7 +234,7 @@ def _ivf_ctes() -> str:
       SELECT vec_id, cid FROM (
         SELECT v.vec_id, s.cid,
                ROW_NUMBER() OVER (PARTITION BY v.vec_id
-                                  ORDER BY {cos('v.e', 's.c')} DESC, s.cid) AS rk
+                                  ORDER BY {fold_cosine_sql('v.e', 's.c')} DESC, s.cid) AS rk
         FROM emb v CROSS JOIN seeds s
       ) WHERE rk = 1
     ),
@@ -243,7 +246,7 @@ def _ivf_ctes() -> str:
       SELECT vec_id, cid FROM (
         SELECT v.vec_id, c.cid,
                ROW_NUMBER() OVER (PARTITION BY v.vec_id
-                                  ORDER BY {cos('v.e', 'c.c')} DESC, c.cid) AS rk
+                                  ORDER BY {fold_cosine_sql('v.e', 'c.c')} DESC, c.cid) AS rk
         FROM emb v CROSS JOIN cents c
       ) WHERE rk = 1
     ),
@@ -252,7 +255,7 @@ def _ivf_ctes() -> str:
       SELECT query_id, cid FROM (
         SELECT q.query_id, c.cid,
                ROW_NUMBER() OVER (PARTITION BY q.query_id
-                                  ORDER BY {cos('q.qe', 'c.c')} DESC, c.cid) AS rk
+                                  ORDER BY {fold_cosine_sql('q.qe', 'c.c')} DESC, c.cid) AS rk
         FROM qs q CROSS JOIN cents c
       ) WHERE rk <= {_IVF_NPROBE}
     ),
@@ -464,7 +467,7 @@ def quantized_topk(corpus: DataFrame, k: int = TOP_K,
     # materialize the quantized corpus once: the query side and the probe
     # side otherwise each re-run the quantization map (and at scale the
     # int8 table is exactly what you'd persist — it's the compressed index)
-    q = quantize_int8(corpus).select("vec_id", "q_int8").localCheckpoint(eager=True)
+    q = quantize_int8(corpus).select("vec_id", "q_int8").transform(_truncate_eager)
     queries = (
         q.orderBy("vec_id").limit(n_queries)
         .select(F.col("vec_id").alias("query_id"), F.col("q_int8").alias("quv"))
@@ -616,8 +619,8 @@ def ivf_incremental_assign(snapshot: DataFrame, batch: DataFrame) -> DataFrame:
     snapshot once; batch placement is a broadcast-centroid map over the
     BATCH only — O(batch), not O(corpus)."""
     cents = ivf_centroids(snapshot)
-    inv_s = _assign_cells(snapshot, cents, nprobe=1, id_col="vec_id")
-    inv_b = _assign_cells(batch, cents, nprobe=1, id_col="vec_id")
+    inv_s = _assign_cells(snapshot, cents, nprobe=1)
+    inv_b = _assign_cells(batch, cents, nprobe=1)
     s_counts = inv_s.groupBy("cid").agg(F.count("*").alias("n_snapshot"))
     b_counts = inv_b.groupBy("cid").agg(F.count("*").alias("n_batch"))
     return (
@@ -634,15 +637,6 @@ def ivf_incremental_assign(snapshot: DataFrame, batch: DataFrame) -> DataFrame:
 
 
 def _ivf_incr_oracle_sql() -> str:
-    def cos(a: str, b: str) -> str:
-        dot = (f"list_reduce(list_transform(range(1, {_IVF_DIM} + 1), "
-               f"i -> {a}[i] * {b}[i]), (x, y) -> x + y)")
-        na = (f"sqrt(list_reduce(list_transform(range(1, {_IVF_DIM} + 1), "
-              f"i -> {a}[i] * {a}[i]), (x, y) -> x + y))")
-        nb = (f"sqrt(list_reduce(list_transform(range(1, {_IVF_DIM} + 1), "
-              f"i -> {b}[i] * {b}[i]), (x, y) -> x + y))")
-        return f"({dot} / ({na} * {nb}))"
-
     avgs = ", ".join(f"AVG(e[{i + 1}])" for i in range(_IVF_DIM))
     return f"""
     WITH emb_s AS (
@@ -661,7 +655,7 @@ def _ivf_incr_oracle_sql() -> str:
       SELECT vec_id, cid FROM (
         SELECT v.vec_id, s.cid,
                ROW_NUMBER() OVER (PARTITION BY v.vec_id
-                                  ORDER BY {cos('v.e', 's.c')} DESC, s.cid) AS rk
+                                  ORDER BY {fold_cosine_sql('v.e', 's.c')} DESC, s.cid) AS rk
         FROM emb_s v CROSS JOIN seeds s
       ) WHERE rk = 1
     ),
@@ -673,7 +667,7 @@ def _ivf_incr_oracle_sql() -> str:
       SELECT vec_id, cid FROM (
         SELECT v.vec_id, c.cid,
                ROW_NUMBER() OVER (PARTITION BY v.vec_id
-                                  ORDER BY {cos('v.e', 'c.c')} DESC, c.cid) AS rk
+                                  ORDER BY {fold_cosine_sql('v.e', 'c.c')} DESC, c.cid) AS rk
         FROM emb_s v CROSS JOIN cents c
       ) WHERE rk = 1
     ),
@@ -681,7 +675,7 @@ def _ivf_incr_oracle_sql() -> str:
       SELECT vec_id, cid FROM (
         SELECT v.vec_id, c.cid,
                ROW_NUMBER() OVER (PARTITION BY v.vec_id
-                                  ORDER BY {cos('v.e', 'c.c')} DESC, c.cid) AS rk
+                                  ORDER BY {fold_cosine_sql('v.e', 'c.c')} DESC, c.cid) AS rk
         FROM emb_b v CROSS JOIN cents c
       ) WHERE rk = 1
     )

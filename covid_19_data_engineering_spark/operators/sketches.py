@@ -24,6 +24,9 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession
 
+from covid_19_data_engineering_spark.operators.lineage import (
+    truncate_eager as _truncate_eager,
+)
 from covid_19_data_engineering_spark.plans.registry import register
 from covid_19_data_engineering_spark.sources.tables import load_table
 
@@ -82,7 +85,7 @@ def cms_heavy_hitters(df: DataFrame, key: Column, key_name: str,
     exact = (
         df.groupBy(key.alias(key_name))
         .agg(F.count(F.lit(1)).alias("exact_count"))
-        .localCheckpoint(eager=True)
+        .transform(_truncate_eager)
     )
     probes = exact.select(
         key_name,

@@ -37,6 +37,9 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from covid_19_data_engineering_spark.operators.dedup import _spread
+from covid_19_data_engineering_spark.operators.lineage import (
+    truncate_eager as _truncate_eager,
+)
 from covid_19_data_engineering_spark.plans.registry import register
 from covid_19_data_engineering_spark.sources.tables import load_table
 
@@ -75,7 +78,7 @@ def dup_span_profile(docs: DataFrame, k: int = SPAN_K,
     flagged = (
         grams.join(df_gram, "gram")
         .select("doc_id", "pos", (F.col("n_docs") >= 2).alias("is_dup"))
-        .localCheckpoint(eager=True)
+        .transform(_truncate_eager)
     )
     # ^ three consumers (per-doc rollup, islands window, final join) would
     # each re-run the gram explode + df join without this materialization

@@ -35,6 +35,9 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from covid_19_data_engineering_spark.operators.lineage import (
+    truncate as _truncate,
+)
 from covid_19_data_engineering_spark.plans.registry import register
 from covid_19_data_engineering_spark.sources.tables import load_table
 
@@ -265,7 +268,7 @@ def logrank_lifetimes(orders: DataFrame, customer: DataFrame,
     per = cust.groupBy("t", "grp").agg(
         F.sum("event").alias("d"),
         F.count(F.lit(1)).alias("tot"),
-    ).localCheckpoint(eager=False)  # feeds the grid and the group counts
+    ).transform(_truncate)  # feeds the grid and the group counts
     grid = (
         per.select("t").distinct()
         .withColumn("grp", F.explode(F.array(F.lit(True), F.lit(False))))

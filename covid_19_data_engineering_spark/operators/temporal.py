@@ -20,6 +20,9 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from covid_19_data_engineering_spark.operators.lineage import (
+    truncate as _truncate,
+)
 from covid_19_data_engineering_spark.plans.registry import register
 from covid_19_data_engineering_spark.sources.tables import load_table
 
@@ -914,13 +917,13 @@ def max_drawdown_daily(orders: DataFrame, year: int = 1995) -> DataFrame:
                    "DATE '1970-01-01') AS BIGINT)").alias("x"))
         .agg(F.sum(F.expr("CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)"))
              .alias("y"))
-        .localCheckpoint(eager=False)
+        .transform(_truncate)
     )
     w = Window.orderBy("x")  # O(days) rows
     dd = (
         daily.withColumn("runmax", F.max("y").over(w))
         .withColumn("dd", F.col("runmax") - F.col("y"))
-    ).localCheckpoint(eager=False)
+    ).transform(_truncate)
     trough = (
         dd.orderBy(F.col("dd").desc(), F.col("x").asc()).limit(1)
         .select(F.col("x").alias("trough_day"),

@@ -23,6 +23,9 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from covid_19_data_engineering_spark.operators.lineage import (
+    truncate_eager as _truncate_eager,
+)
 from covid_19_data_engineering_spark.plans.registry import register
 from covid_19_data_engineering_spark.sources.tables import load_table
 
@@ -59,7 +62,7 @@ def textrank(edges: DataFrame, iters: int = TR_ITERS,
     PageRank over the symmetric edge list. Contribution along an edge is
     (units * w) div strength(src) in 1e-12 units; damping (85 * inflow)
     div 100 — exact BIGINT throughout, engine-identical."""
-    edges = edges.localCheckpoint(eager=True)  # referenced every round
+    edges = edges.transform(_truncate_eager)  # referenced every round
     strength = edges.groupBy("src").agg(F.sum("w").alias("s"))
     nodes = strength.select(F.col("src").alias("token"), "s")
     n = nodes.groupBy().agg(F.count("*").alias("n"))

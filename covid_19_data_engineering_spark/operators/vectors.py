@@ -1,18 +1,24 @@
-"""Shared vector primitives: cosine similarity and deterministic
+"""Shared vector primitives: cosine similarity, the nearest-centroid
+kernel with its fixed-point Lloyd update, and deterministic
 random-hyperplane LSH bucketing.
 
-Used by both the similarity-search operators (operators/similarity.py) and
-the embedding near-dup operator (operators/dedup.py) so the two surfaces
-share one bucket assignment. Everything is a pure JVM column expression
-(zip_with / aggregate / transform) — no Python in the hot path — and the
-hyperplanes are derived from fixed integer mixes, so bucket assignment is
-reproducible across runs and engines.
+The similarity-search operators (operators/similarity.py) and the
+embedding near-dup operator (operators/dedup.py) share one bucket
+assignment; k-means, SemDeDup, PQ and IVF share one argmin over
+centroids and one centroid update. Everything is a pure JVM column
+expression (zip_with / aggregate / transform) — no Python in the hot
+path — and the hyperplanes are derived from fixed integer mixes, so
+bucket assignment is reproducible across runs and engines.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable, Sequence
+
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
+
+COORD_UNIT = 1_000_000        # centroid fixed-point: 1e-6
 
 
 def _spread(df: DataFrame) -> DataFrame:
@@ -41,11 +47,11 @@ def _spread(df: DataFrame) -> DataFrame:
 def cosine_sim(a: Column, b: Column) -> Column:
     """Cosine as an explicit left-fold over DOUBLE elements in index
     order — the one arithmetic both engines can replay bit-identically.
-    Inputs are cast to array<double> FIRST (round-12 sweep finding: a
-    float x float Spark multiply ran in FLOAT before the cast while the
-    DuckDB oracle multiplied the exactly-widened doubles, and the ULP
-    difference flipped a ROUND(x, 6) boundary row at sf0.1 — the oracle
-    twin of this expression is ``fold_cosine_sql``)."""
+    Inputs are cast to array<double> FIRST: a float x float Spark
+    multiply runs in FLOAT, while the DuckDB oracle multiplies the
+    exactly-widened doubles, and the ULP difference flips ROUND(x, 6)
+    boundary rows (the oracle twin of this expression is
+    ``fold_cosine_sql``)."""
     a = a.cast("array<double>")
     b = b.cast("array<double>")
     dot = F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
@@ -63,8 +69,8 @@ def fold_cosine_sql(a: str, b: str, dim: int = 64) -> str:
     (list_reduce with no init == 0.0 + x exactly), then dot / (na * nb).
     DuckDB's builtin list_cosine_similarity folds in a different
     association order and can differ by an ULP — enough to flip a
-    ROUND(x, 6) boundary (observed: one row at sf0.1 and one at
-    sf0.001 across the ANN family in the round-12 three-SF sweep)."""
+    ROUND(x, 6) boundary (observed on the ANN family at sf0.1 and
+    sf0.001)."""
     dot = (f"list_reduce(list_transform(range(1, {dim} + 1), "
            f"i -> {a}[i] * {b}[i]), (x, y) -> x + y)")
     na = (f"sqrt(list_reduce(list_transform(range(1, {dim} + 1), "
@@ -72,6 +78,60 @@ def fold_cosine_sql(a: str, b: str, dim: int = 64) -> str:
     nb = (f"sqrt(list_reduce(list_transform(range(1, {dim} + 1), "
           f"i -> {b}[i] * {b}[i]), (x, y) -> x + y))")
     return f"({dot} / ({na} * {nb}))"
+
+
+def nearest_centroids(vec: Column, cents: Column,
+                      dist: Callable[[Column, Column], Column], n: int,
+                      *carry: str) -> Column:
+    """The ``n`` nearest centroids of ``vec`` as struct(dist, cid, *carry).
+
+    ``cents`` is an array<struct<cid, c, ...>> column and ``dist(vec, c)``
+    is lower-is-nearer. Struct order compares dist, then cid, so an exact
+    distance tie goes to the lower centroid id — the (dist, cid)
+    ROW_NUMBER order every oracle replays. ``carry`` names extra centroid
+    fields to copy into the result; cid is unique per array, so they
+    never decide an order. ``n == 1`` is one ``array_min`` (a struct
+    column); ``n > 1`` sorts, keeps the first n and explodes them, one
+    output row per centroid. Either way the ranking runs inside the
+    row's projection: no window, no shuffle."""
+    scored = F.transform(cents, lambda c: F.struct(
+        dist(vec, c["c"]).alias("dist"),
+        c["cid"].alias("cid"),
+        *[c[f].alias(f) for f in carry],
+    ))
+    if n == 1:
+        return F.array_min(scored)
+    return F.explode(F.slice(F.array_sort(scored), 1, n))
+
+
+def lloyd_update(df: DataFrame, keys: Sequence[str],
+                 vec_col: str) -> DataFrame:
+    """One Lloyd centroid update: (*keys, c), the per-dimension mean of
+    ``vec_col`` over each ``keys`` group. SUM(double) over an unordered
+    group depends on partition order, so each coordinate is floored to
+    COORD_UNIT integer units first — the BIGINT sums are order-free —
+    and the mean is one exact double division; floor, not round,
+    because round's half-tie direction is where two engines could
+    disagree. Groups on (*keys, dimension): at most K x dim groups,
+    combined map-side whatever the corpus size."""
+    return (
+        df.select(*keys, F.posexplode(vec_col).alias("pos", "val"))
+        .groupBy(*keys, "pos")
+        .agg(
+            F.sum(F.floor(F.col("val") * COORD_UNIT)).alias("su"),
+            F.count("*").alias("cnt"),
+        )
+        .select(
+            *keys, "pos",
+            (F.col("su").cast("double") / F.col("cnt") / COORD_UNIT)
+            .alias("coord"),
+        )
+        .groupBy(*keys)
+        .agg(F.transform(
+            F.sort_array(F.collect_list(F.struct("pos", "coord"))),
+            lambda s: s["coord"],
+        ).alias("c"))
+    )
 
 
 # Default 16 tables x 4 bits: per-table collision prob for angle θ is
@@ -142,20 +202,18 @@ _PLANES_CACHE: dict[str, Column] = {}
 def _planes_lit() -> Column:
     """The 64x64 hyperplane matrix as ONE cached SQL literal.
 
-    Three generations of this literal, each ~2-6s cheaper per query build:
-    64 CreateArray trees of 64 F.lit nodes (thousands of expression nodes
-    walked by every analysis pass), then ``F.lit(PLANES)`` (one Literal
-    node but ~2.5s of py4j list conversion per CALL), now a parsed SQL
-    array literal built lazily ONCE per SparkContext. Values are
-    bit-identical across all three forms (each double rendered via repr,
-    which round-trips exactly).
+    A parsed SQL array literal, built lazily ONCE per SparkContext: 64
+    CreateArray trees of 64 F.lit nodes would put thousands of
+    expression nodes in front of every analysis pass, and
+    ``F.lit(PLANES)`` pays ~2.5s of py4j list conversion per call. Each
+    double is rendered via repr, which round-trips exactly.
 
     The cache is keyed on the active application id, NOT a bare module
     global: an F.expr Column holds a py4j reference into the JVM, so after
     a SparkContext stop/restart in the same Python process a global would
-    hand out a stale JVM handle that fails obscurely on next use (round-4
-    ADVICE). The SQL string itself is process-cached — rebuilding the
-    Column for a fresh context is one O(1) F.expr call."""
+    hand out a stale JVM handle that fails obscurely on next use. The SQL
+    string itself is process-cached — rebuilding the Column for a fresh
+    context is one O(1) F.expr call."""
     global _PLANES_SQL
     if _PLANES_SQL is None:
         _PLANES_SQL = "array(" + ",".join(
@@ -177,15 +235,14 @@ def _planes_lit() -> Column:
 def signature_bits_array(vec: Column) -> Column:
     """All N_PLANES sign bits as ONE array<int> expression.
 
-    Single-pass structure (the simhash lesson, round-3 verdict #3, applied
-    to the LSH signatures in round 4): the naive form built 64 independent
-    ``aggregate()`` trees and the per-table bucket chains then EMBEDDED
-    each tree again, so Catalyst analyzed and compiled thousands of
-    aggregate nodes per query (~7s of planning/codegen before a single row
-    moved). One ``transform`` over a 2-D plane literal loops at RUNTIME
-    instead: the expression tree stays small regardless of N_PLANES, and
-    the per-plane left-to-right fold order (bit-compatible with the DuckDB
-    ``lsh_bucket_ctes`` twin) is unchanged."""
+    Single-pass structure: 64 independent ``aggregate()`` trees, each
+    embedded again by the per-table bucket chains, would make Catalyst
+    analyze and compile thousands of aggregate nodes per query (~7s of
+    planning/codegen before a single row moves). One ``transform`` over
+    a 2-D plane literal loops at RUNTIME instead: the expression tree
+    stays small regardless of N_PLANES, and the per-plane left-to-right
+    fold order is bit-compatible with the DuckDB ``lsh_bucket_ctes``
+    twin."""
     planes = _planes_lit()
     return F.transform(
         planes,

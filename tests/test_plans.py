@@ -112,14 +112,21 @@ def test_embedding_dedup_plan_is_bucketed(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_ivf_assign_cells_shuffles_on_id_only(spark):
-    """_assign_cells ranks centroids per row; its window key must be the id
-    column, not every column (which dragged the 64-float embedding through
-    the shuffle as part of the key)."""
+def test_ivf_assign_cells_is_map_only(spark):
+    """IVF cell assignment ranks the broadcast centroids inside each row's
+    projection (the shared nearest-centroid kernel): no window ranks
+    centroids per vec_id or query_id, the corpus is never hash-shuffled
+    by vec_id, and no vector column is ever a shuffle key."""
     df = REGISTRY["ann_ivf_topk"].builder(spark, SF_SMOKE)
     plan = _executed_plan(df)
     for m in re.finditer(r"Exchange hashpartitioning\(([^)]*)\)", plan):
         assert "embedding" not in m.group(1), f"vector in shuffle key: {m.group(0)}"
+        assert not re.search(r"\bvec_id#", m.group(1)), f"corpus shuffled: {m.group(0)}"
+    for m in re.finditer(r"Window \[.*\], \[([^\]]*)\], \[([^\]]*)\]", plan):
+        part, order = m.groups()
+        assert not (re.search(r"\b(vec_id|query_id)#", part)
+                    and re.search(r"\b(cid|_sim)#", order)), \
+            f"window ranks centroids: {m.group(0)}"
 
 
 def test_approx_distinct_accuracy(spark):
