@@ -31,11 +31,11 @@ sampling policy: >10k rows -> 1000, >1k -> 500, else all rows; non-NULL
 values only; values stripped before classification.
 
 Two execution modes:
-- ``sample`` (default, faithful): per column, a ``SELECT col WHERE col IS NOT
-  NULL LIMIT n`` plan — Catalyst pushes the limit + single-column projection
-  into the scan, so cost is O(sample) regardless of table size (this is why
-  the approach survives 100 TB: the scan never reads more than n values per
-  column). Classification runs on the driver over <=1000 values.
+- ``sample`` (default, faithful): one bounded Spark job per table, a
+  ``LIMIT 10001`` slice of every column. The limit pushes into the scan, so
+  cost is O(sample) regardless of table size (this is why the approach
+  survives 100 TB); the slice's length picks the sample size, so no count
+  scan precedes it. Classification runs on the driver over <=1000 rows.
 - ``full``: one distributed pass classifying every cell with JVM-side
   expressions and aggregating label sets per column — exact over all rows;
   date/timestamp recognition narrows to Spark-castable formats (documented
@@ -181,26 +181,22 @@ def infer_table_schema(df: DataFrame, mode: str = "sample",
 
 
 def _infer_by_sampling(df: DataFrame, row_count: int | None) -> dict[str, str]:
-    """ONE Spark job for the whole table: a ``cap``-row slice of every
-    column is collected together and each cell classified driver-side by
-    the exact reference kernel (``classify_value`` — dateutil parsing and
-    all; the JVM ``_classify_expr`` approximation stays reserved for
-    full-scan mode).
+    """ONE bounded Spark job for the whole table, not one per column: a
+    slice of every column is collected together and each cell classified
+    driver-side by the exact reference kernel (``classify_value``; the JVM
+    ``_classify_expr`` approximation is reserved for full-scan mode).
 
-    Round-3 verdict #8: the previous formulation issued one
-    limit(cap)-collect job PER COLUMN — a 50-column staging table meant 50
-    scheduler round-trips for one schema. The limit still pushes into the
-    scan (early termination), the driver moves at most cap x n_cols
-    scalars (cap <= 1000), and per-column null filtering happens on the
-    collected slice. The one semantic trade: a column whose first cap rows
-    are all NULL contributes no labels (-> text) where per-column sampling
-    would have scanned deeper for non-null values — acceptable for a
-    sampling mode whose answers are already prefix-dependent, and the
-    full-scan mode exists for exactness."""
+    Without ``row_count`` the slice is 10,001 rows, one past the largest
+    table ``sample_limit`` keeps whole: its length picks the tier and its
+    prefix is the sample. So no count scan runs, and only rows that parse
+    are counted (a count over a DROPMALFORMED CSV read skips parsing and
+    counts malformed rows too). Nulls are filtered per column on the slice:
+    a column whose sampled rows are all NULL resolves to text."""
     if row_count is None:
-        row_count = df.count()
-    cap = sample_limit(row_count)
-    rows = df.limit(cap).collect()
+        rows = df.limit(10_001).collect()
+        rows = rows[:sample_limit(len(rows))]
+    else:
+        rows = df.limit(sample_limit(row_count)).collect()
     resolved: dict[str, str] = {}
     for i, column in enumerate(df.columns):
         labels = {

@@ -11,18 +11,18 @@ machinery on the Spark catalog:
 - count validation report            (reference load_tables_daily.py:365-372)
 
 Scale notes: promote is a metastore rename — O(1), no data movement, exactly
-why the reference chose rename over copy. History tables are written
-partitioned by ``load_date`` so time-travel reads prune to one partition and
-daily appends never rewrite old data. The default DROP+RENAME promote keeps
-the reference's two-catalog-op gap (load_tables_daily.py:232-244); the
-round-4 ``mode="atomic"`` promote closes it with a single-op view-pointer
-commit over versioned physical tables (see ``promote``).
+why the reference chose rename over copy; it runs no Spark job (it probes
+one table, never lists the schema). History tables are partitioned by
+``load_date`` so time-travel reads prune to one partition and daily appends
+never rewrite old data. The default DROP+RENAME promote keeps the
+reference's two-catalog-op gap (load_tables_daily.py:232-244);
+``mode="atomic"`` closes it with a single-op view-pointer commit (see ``promote``).
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 
 BUILD_SUFFIX = "_build"
 HISTORY_SUFFIX = "_history"
@@ -46,13 +46,23 @@ def drop_table(spark: SparkSession, schema: str, table: str) -> None:
     spark.sql(f"DROP TABLE IF EXISTS {qualified(schema, table)}")
 
 
-def write_build_table(spark: SparkSession, df: DataFrame, schema: str, table: str) -> str:
+def _table_type(spark: SparkSession, schema: str, table: str) -> str | None:
+    """Catalog type (``MANAGED``, ``VIEW``, ...) or None if absent; no job."""
+    name = qualified(schema, table)
+    return spark.catalog.getTable(name).tableType if spark.catalog.tableExists(name) else None
+
+
+def write_build_table(spark: SparkSession, df: DataFrame, schema: str, table: str) -> int:
     """Land a DataFrame as the staging table ``<table>_build`` (overwrite:
-    a rerun of a failed day replaces the half-built table, never prod)."""
+    a rerun of a failed day replaces the half-built table, never prod).
+    Returns the number of rows written, counted by an observed metric on
+    the write job itself rather than by a second scan."""
     ensure_schema(spark, schema)
-    build = table + BUILD_SUFFIX
-    df.write.mode("overwrite").format("parquet").saveAsTable(qualified(schema, build))
-    return build
+    written = Observation()
+    (df.observe(written, F.count(F.lit(1)).alias("rows"))
+       .write.mode("overwrite").format("parquet")
+       .saveAsTable(qualified(schema, table + BUILD_SUFFIX)))
+    return written.get["rows"]
 
 
 def clone_structure(spark: SparkSession, schema: str, src: str, dst: str) -> None:
@@ -68,8 +78,8 @@ def clone_structure(spark: SparkSession, schema: str, src: str, dst: str) -> Non
 
 def promote(spark: SparkSession, schema: str, table: str,
             mode: str = "rename") -> None:
-    """Staging -> production swap (reference C2/B9). Metastore-only; no data
-    rewrite at any scale. Two commit protocols:
+    """Staging -> production swap (reference C2/B9). Catalog metadata only:
+    no data rewrite at any scale and no Spark job. Two commit protocols:
 
     - ``mode="rename"`` (reference parity): DROP prod + RENAME build. Two
       catalog ops — a reader between them sees no table (the same gap the
@@ -94,12 +104,11 @@ def promote(spark: SparkSession, schema: str, table: str,
     build = table + BUILD_SUFFIX
     if not table_exists(spark, schema, build):
         raise ValueError(f"no build table {qualified(schema, build)} to promote")
+    prod_type = _table_type(spark, schema, table)
     if mode == "rename":
         # a prod name left as a view by an earlier atomic-mode promote needs
         # DROP VIEW (DROP TABLE refuses); mode switching stays legal
-        db = schema or spark.catalog.currentDatabase()
-        if any(t.name == table and t.tableType == "VIEW"
-               for t in spark.catalog.listTables(db)):
+        if prod_type == "VIEW":
             spark.sql(f"DROP VIEW IF EXISTS {qualified(schema, table)}")
         drop_table(spark, schema, table)
         spark.sql(
@@ -112,10 +121,10 @@ def promote(spark: SparkSession, schema: str, table: str,
     db = schema or spark.catalog.currentDatabase()
     version_prefix = f"{table}__v"
     versions = sorted(
-        int(t.name[len(version_prefix):])
-        for t in spark.catalog.listTables(db)
-        if t.name.startswith(version_prefix)
-        and t.name[len(version_prefix):].isdigit()
+        int(r.tableName[len(version_prefix):])
+        for r in spark.sql(f"SHOW TABLES IN {db} LIKE '{version_prefix}*'").collect()
+        if r.tableName.startswith(version_prefix)
+        and r.tableName[len(version_prefix):].isdigit()
     )
     next_v = (versions[-1] + 1) if versions else 1
     versioned = f"{version_prefix}{next_v}"
@@ -123,10 +132,7 @@ def promote(spark: SparkSession, schema: str, table: str,
         f"ALTER TABLE {qualified(schema, build)} RENAME TO {qualified(schema, versioned)}"
     )
     prod = qualified(schema, table)
-    is_plain_table = any(
-        t.name == table and t.tableType != "VIEW" for t in spark.catalog.listTables(db)
-    )
-    if is_plain_table:
+    if prod_type not in (None, "VIEW"):
         drop_table(spark, schema, table)  # one-time migration from rename mode
     # THE commit: a single catalog operation repoints production
     spark.sql(f"CREATE OR REPLACE VIEW {prod} AS SELECT * FROM {qualified(schema, versioned)}")
@@ -199,10 +205,7 @@ def compact_table(spark: SparkSession, schema: str, table: str,
     target_files ~= table_bytes / maxPartitionBytes, run periodically per
     partition. Returns the row count preserved (validation the caller logs).
     """
-    target = qualified(schema, table)
-    df = spark.table(target)
-    n = df.count()
-    compacted = df.coalesce(target_files)
-    write_build_table(spark, compacted, schema, table)
+    compacted = spark.table(qualified(schema, table)).coalesce(target_files)
+    n = write_build_table(spark, compacted, schema, table)
     promote(spark, schema, table)
     return n

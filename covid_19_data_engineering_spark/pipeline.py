@@ -3,9 +3,12 @@
 - ``run_daily``     (reference C6, load_tables_daily.py:562-646): land CSVs as
   all-string build tables, infer + cast types, promote build->prod, report
   counts. The reference's per-column SELECT round trips and shell COPY hops
-  collapse into one Spark job per table.
+  collapse into at most 8 Spark jobs per file: CSV header, inference sample,
+  build write (which counts its rows), quarantine count (2) and write, and
+  the count report's prod scan (2). Promote runs none.
 - ``run_quarterly`` (reference C7, vertica_upload.py:361-398): same landing
-  plus a ``load_time`` audit column and an append-only history snapshot.
+  plus a ``load_time`` audit column and an append-only history snapshot;
+  4 Spark jobs per file (header, inference sample, build write, history).
   NOTE: the reference's quarterly row-insert builds its INSERT inside the row
   loop but executes it after (vertica_upload.py:108-139), silently inserting
   only the last row of each CSV. This driver implements the evident intent —
@@ -21,7 +24,7 @@ from __future__ import annotations
 import logging
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 from covid_19_data_engineering_spark import lifecycle
 from covid_19_data_engineering_spark.inference import (
@@ -45,13 +48,13 @@ class LoadResult:
 
 
 def _land_one(spark: SparkSession, csv_path: str, schema: str,
-              quarantine_schema: str | None = None) -> tuple[str, LoadResult, DataFrame]:
-    """CSV -> typed staging table. Returns (table, result, typed_df)."""
+              quarantine_schema: str | None = None) -> LoadResult:
+    """CSV -> typed staging table."""
     table = table_name_for(csv_path)
     good, bad = read_csv_landing(spark, csv_path)
     inferred = infer_table_schema(good)
     typed = apply_inferred_schema(good, inferred)
-    lifecycle.write_build_table(spark, typed, schema, table)
+    n_good = lifecycle.write_build_table(spark, typed, schema, table)
     n_bad = 0
     if quarantine_schema is not None:
         n_bad = bad.count()
@@ -59,8 +62,7 @@ def _land_one(spark: SparkSession, csv_path: str, schema: str,
             bad.write.mode("append").format("parquet").saveAsTable(
                 lifecycle.qualified(quarantine_schema, f"{table}_quarantine")
             )
-    n_good = spark.table(lifecycle.qualified(schema, table + lifecycle.BUILD_SUFFIX)).count()
-    return table, LoadResult(table, n_good, n_bad, inferred), typed
+    return LoadResult(table, n_good, n_bad, inferred)
 
 
 def backup_csv_files(csv_paths: list[str], backup_dir: str,
@@ -88,16 +90,14 @@ def run_daily(spark: SparkSession, csv_paths: list[str], schema: str = "daily",
     if backup_dir is not None:
         backup_csv_files(csv_paths, backup_dir)
     results: list[LoadResult] = []
-    tables: list[str] = []
     for path in csv_paths:
-        table, result, _ = _land_one(
-            spark, path, schema, quarantine_schema=schema if quarantine else None
-        )
-        lifecycle.promote(spark, schema, table)
+        result = _land_one(spark, path, schema,
+                           quarantine_schema=schema if quarantine else None)
+        lifecycle.promote(spark, schema, result.table)
         results.append(result)
-        tables.append(table)
         log.info("daily: %s loaded %d rows (%d quarantined)",
-                 table, result.rows_loaded, result.rows_quarantined)
+                 result.table, result.rows_loaded, result.rows_quarantined)
+    tables = [r.table for r in results]
     report = {r["table_name"]: r["row_count"]
               for r in lifecycle.count_report(spark, schema, tables).collect()}
     for r in results:
@@ -120,10 +120,9 @@ def run_quarterly(spark: SparkSession, csv_paths: list[str],
         good, _ = read_csv_landing(spark, path)
         inferred = infer_table_schema(good)
         typed = lifecycle.with_load_time(apply_inferred_schema(good, inferred))
-        lifecycle.write_build_table(spark, typed, schema, table)
+        n = lifecycle.write_build_table(spark, typed, schema, table)
         lifecycle.promote(spark, schema, table)
         lifecycle.snapshot_history(spark, schema, table)
-        n = spark.table(lifecycle.qualified(schema, table)).count()
         results.append(LoadResult(table, n, 0, inferred))
         log.info("quarterly: %s loaded %d rows + history snapshot", table, n)
     return results

@@ -213,3 +213,49 @@ def test_promote_mode_switching(spark):
         spark, spark.createDataFrame([(3,)], "id long"), schema, "t")
     lc.promote(spark, schema, "t", mode="rename")
     assert [r["id"] for r in spark.table(f"{schema}.t").collect()] == [3]
+
+
+def _jobs_in_group(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setJobGroup("", "")
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_sample_cap_counts_good_rows_only(spark, tmp_path):
+    """1,000 good rows plus one malformed row: the sampling tier must come
+    from the rows that parse (<= 1,000 -> sample all of them, so the one
+    non-integer ``v`` is seen), not from a count that includes the
+    DROPMALFORMED row (1,001 -> a 500-row sample that misses it)."""
+    p = tmp_path / "Cap_Probe.csv"
+    body = "".join(f"{i},{i}\n" for i in range(1, 1000))
+    p.write_text("id,v\n" + body + "1000,abc\n" + '"unclosed 9,x\n')
+    (result,) = run_daily(spark, [str(p)], schema="daily_cap")
+    assert (result.rows_loaded, result.rows_quarantined) == (1000, 1)
+    assert result.inferred_schema["v"] == "text"
+
+
+def test_write_path_job_budget(spark, tmp_path):
+    """Ingest re-derives no known fact with a Spark job: row counts come
+    from the build write, inference is one bounded job, and promote is
+    catalog metadata only in both commit protocols."""
+    from covid_19_data_engineering_spark import lifecycle as lc
+
+    p = tmp_path / "Budget_File.csv"
+    p.write_text("id,v\n1,a\n2,b\n" + '"unclosed 9,x\n')
+    daily = _jobs_in_group(spark, "budget-daily",
+                           lambda: run_daily(spark, [str(p)], schema="budget_d"))
+    quarterly = _jobs_in_group(spark, "budget-quarterly",
+                               lambda: run_quarterly(spark, [str(p)], schema="budget_q"))
+    assert daily <= 8 and quarterly <= 4, (daily, quarterly)
+
+    lc.ensure_schema(spark, "budget_p")
+    # rename, migrate to atomic, atomic over an existing version, back to rename
+    for i, mode in enumerate(("rename", "atomic", "atomic", "rename")):
+        spark.sql("CREATE TABLE budget_p.t_build (id BIGINT) USING parquet")
+        jobs = _jobs_in_group(spark, f"budget-promote-{i}",
+                              lambda: lc.promote(spark, "budget_p", "t", mode=mode))
+        assert jobs == 0, (mode, jobs)
