@@ -23,6 +23,7 @@ SPARK_GRAFT_BENCH_PASSES overrides the pass count.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import sys
@@ -236,6 +237,58 @@ def _run_headline_isolated(n_passes: int) -> tuple[dict, dict]:
     raise RuntimeError("isolated headline pass printed no per-query record")
 
 
+def tail_lines(out: dict, timings: dict[str, float],
+               extra_timings: dict[str, float]) -> tuple[str, str]:
+    """The two lines printed after the full record ``out``.
+
+    The full record can exceed the driver's captured stdout tail (measured:
+    the driver keeps the LAST 2000 BYTES and json-parses the last complete
+    line) once 60+ per-query maps are included. The tail carries, in order
+    (newest last, everything within the 2000-byte window):
+
+    1. "per_query_centisec": the FULL per-query medians as a positional
+       array of integer centiseconds in sorted-name order. The name list
+       is deterministic — sorted(timed queries) — so any reader with the
+       registry (or the full first-line record from a local log) can
+       re-attach names; "names_sha256" (the first 8 hex chars of sha256
+       over the newline-joined names) detects a registry or name-order
+       mismatch. 10 ms quantization is well inside the sub-second noise
+       band the per-query comparison tolerates.
+    2. the final summary line: headline total + the 12 headline per-query
+       medians under "queries" (full names — the round-over-round gate
+       set) + as many slowest-extras as the byte budget allows (trimmed
+       so lines 1+2 stay under ~1900 bytes). The summary is never cut: on
+       overflow it drops every slowest-extra and stays last, so the byte
+       window loses the front of line 1, not the summary.
+    """
+    all_timings = {**timings, **extra_timings}
+    order = sorted(all_timings)
+    pq_line = json.dumps({
+        "metric": "per_query_centisec",
+        "n": len(order),
+        "order": "sorted_names",
+        "names_sha256": hashlib.sha256("\n".join(order).encode()).hexdigest()[:8],
+        "v": [int(round(all_timings[n] * 100)) for n in order],
+    }, separators=(",", ":"))
+    summary = {
+        "metric": out["metric"],
+        "value": out["value"],
+        "unit": out["unit"],
+        "sf": out["sf"],
+        "passes": out["passes"],
+        "extra_total": round(sum(extra_timings.values()), 3),
+        "headline_isolated": out["headline_isolated"],
+        "queries": timings,
+    }
+    slowest = sorted(extra_timings.items(), key=lambda kv: kv[1], reverse=True)
+    for k in range(12, -1, -1):
+        summary["slowest_extras"] = dict(slowest[:k])
+        tail_line = json.dumps(summary, separators=(",", ":"))
+        if len(pq_line) + len(tail_line) + 2 <= 1900:
+            break
+    return pq_line, tail_line
+
+
 def main() -> None:
     from covid_19_data_engineering_spark.plans.registry import all_queries
     from covid_19_data_engineering_spark.session import get_spark
@@ -341,49 +394,8 @@ def main() -> None:
         "headline_isolated": headline_isolated,
     }
     print(json.dumps(out))
-    # the full record above can exceed the driver's captured stdout tail
-    # (measured: the driver keeps the LAST 2000 BYTES and json-parses the
-    # last complete line) once 60+ per-query maps are included — r05/r06/
-    # r07 all lost the headline "value" to truncation, and r13's 300-entry
-    # map left PERF_r13 with per_query {} / geomean null (round-13 verdict
-    # #3). The tail now carries, in order (newest last, everything within
-    # the 2000-byte window):
-    #   1. "per_query_centisec": the FULL per-query medians as a positional
-    #      array of integer centiseconds in sorted-name order. The name
-    #      list is deterministic — sorted(timed queries) — so any reader
-    #      with the registry (or the full first-line record from a local
-    #      log) can re-attach names; 10 ms quantization is well inside the
-    #      sub-second noise band the per-query comparison tolerates.
-    #   2. the final summary line: headline total + the 12 headline
-    #      per-query medians under "queries" (full names — the round-over-
-    #      round gate set) + as many slowest-extras as the byte budget
-    #      allows (auto-trimmed so lines 1+2 stay under ~1900 bytes).
-    all_timings = {**timings, **extra_timings}
-    order = sorted(all_timings)
-    pq_line = json.dumps({
-        "metric": "per_query_centisec",
-        "n": len(order),
-        "order": "sorted_names",
-        "v": [int(round(all_timings[n] * 100)) for n in order],
-    }, separators=(",", ":"))
-    summary = {
-        "metric": out["metric"],
-        "value": out["value"],
-        "unit": out["unit"],
-        "sf": out["sf"],
-        "passes": out["passes"],
-        "extra_total": round(sum(extra_timings.values()), 3),
-        "headline_isolated": headline_isolated,
-        "queries": timings,
-    }
-    slowest = sorted(extra_timings.items(), key=lambda kv: kv[1], reverse=True)
-    for k in range(12, -1, -1):
-        summary["slowest_extras"] = dict(slowest[:k])
-        tail_line = json.dumps(summary, separators=(",", ":"))
-        if len(pq_line) + len(tail_line) + 2 <= 1900:
-            break
-    print(pq_line)
-    print(tail_line)
+    for line in tail_lines(out, timings, extra_timings):
+        print(line)
     spark.stop()
 
 

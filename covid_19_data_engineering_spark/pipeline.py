@@ -3,9 +3,13 @@
 - ``run_daily``     (reference C6, load_tables_daily.py:562-646): land CSVs as
   all-string build tables, infer + cast types, promote build->prod, report
   counts. The reference's per-column SELECT round trips and shell COPY hops
-  collapse into at most 8 Spark jobs per file: CSV header, inference sample,
-  build write (which counts its rows), quarantine count (2) and write, and
-  the count report's prod scan (2). Promote runs none.
+  collapse into at most 8 Spark jobs per file, on two concurrent branches
+  once the CSV header is read. The critical path is the caller's thread:
+  header, inference sample, build write (which counts its rows), then, after
+  the quarantine branch joins, promote (no job) and the count report's prod
+  scan (2). The quarantine branch runs alongside inference and the build
+  write: its count (2 jobs, a second parse of the file) and, only when that
+  count is non-zero, its append (1).
 - ``run_quarterly`` (reference C7, vertica_upload.py:361-398): same landing
   plus a ``load_time`` audit column and an append-only history snapshot;
   4 Spark jobs per file (header, inference sample, build write, history).
@@ -14,17 +18,21 @@
   only the last row of each CSV. This driver implements the evident intent —
   ALL rows land — and tests/test_pipeline.py pins that as a regression test.
 
-Every per-table unit of work is independent; at cluster scale the manifest
-loop can submit tables as concurrent jobs (scheduler pools) — sequential here
-for determinism, the plans are identical either way.
+The two branches of a daily load share no data, so overlapping them changes
+no plan, job or count. The quarantine branch must run on an
+``InheritableThread``: a plain thread sees no job group and no job tags, so
+its jobs would escape a caller's job-group accounting and tag cancellation.
+Files still load one after another.
 """
 
 from __future__ import annotations
 
 import logging
+from concurrent.futures import Future
 from dataclasses import dataclass, field
 
-from pyspark.sql import SparkSession
+from pyspark import InheritableThread
+from pyspark.sql import DataFrame, SparkSession
 
 from covid_19_data_engineering_spark import lifecycle
 from covid_19_data_engineering_spark.inference import (
@@ -47,22 +55,42 @@ class LoadResult:
     inferred_schema: dict[str, str] = field(default_factory=dict)
 
 
-def _land_one(spark: SparkSession, csv_path: str, schema: str,
-              quarantine_schema: str | None = None) -> LoadResult:
-    """CSV -> typed staging table."""
-    table = table_name_for(csv_path)
-    good, bad = read_csv_landing(spark, csv_path)
-    inferred = infer_table_schema(good)
-    typed = apply_inferred_schema(good, inferred)
-    n_good = lifecycle.write_build_table(spark, typed, schema, table)
-    n_bad = 0
-    if quarantine_schema is not None:
+def _quarantine(bad: DataFrame, target: str, out: Future) -> None:
+    """Count the malformed rows and append them to ``target`` only when there
+    are any; hand the count, or any error (which the caller re-raises), to
+    ``out``, so an error can never leave ``out`` unset."""
+    try:
         n_bad = bad.count()
         if n_bad:
-            bad.write.mode("append").format("parquet").saveAsTable(
-                lifecycle.qualified(quarantine_schema, f"{table}_quarantine")
-            )
-    return LoadResult(table, n_good, n_bad, inferred)
+            bad.write.mode("append").format("parquet").saveAsTable(target)
+        out.set_result(n_bad)
+    except BaseException as exc:
+        out.set_exception(exc)
+
+
+def _land_one(spark: SparkSession, csv_path: str, schema: str,
+              quarantine_schema: str | None = None) -> LoadResult:
+    """CSV -> typed staging table, with the quarantine branch running
+    alongside inference and the build write. A build failure wins over a
+    quarantine failure; neither branch outlives the call."""
+    table = table_name_for(csv_path)
+    good, bad = read_csv_landing(spark, csv_path)
+    n_bad: Future = Future()
+    branch = None
+    if quarantine_schema is None:
+        n_bad.set_result(0)
+    else:
+        target = lifecycle.qualified(quarantine_schema, f"{table}_quarantine")
+        branch = InheritableThread(_quarantine, args=(bad, target, n_bad))
+        branch.start()
+    try:
+        inferred = infer_table_schema(good)
+        typed = apply_inferred_schema(good, inferred)
+        n_good = lifecycle.write_build_table(spark, typed, schema, table)
+    finally:
+        if branch is not None:
+            branch.join()
+    return LoadResult(table, n_good, n_bad.result(), inferred)
 
 
 def backup_csv_files(csv_paths: list[str], backup_dir: str,

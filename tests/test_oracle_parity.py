@@ -96,6 +96,18 @@ def test_registry_has_no_rows_only_entries():
     assert ROWS_ONLY_CASES == []
 
 
+def _load(relpath, name):
+    """Import a repo script (bench.py, tools/*) as a module."""
+    import importlib.util
+    import os
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    spec = importlib.util.spec_from_file_location(name, os.path.join(repo, relpath))
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
 def test_bench_and_scale_lists_cover_only_registered_queries():
     """bench.py derives its extras from the registry (round-9 verdict #1),
     so the invariant to pin flipped from list membership to COVERAGE:
@@ -103,18 +115,6 @@ def test_bench_and_scale_lists_cover_only_registered_queries():
     unless named in EXCLUDED with a reason string. bench_scale.py FAMILY
     stays a pinned list — a name that drifts from the registry crashes
     the scale run, so membership is still the pin there."""
-    import importlib.util
-    import os
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-    def _load(relpath, name):
-        spec = importlib.util.spec_from_file_location(
-            name, os.path.join(repo, relpath))
-        mod = importlib.util.module_from_spec(spec)
-        spec.loader.exec_module(mod)
-        return mod
-
     bench = _load("bench.py", "bench_mod")
     scale = _load("tools/bench_scale.py", "bench_scale_mod")
     names = set(REGISTRY)
@@ -140,3 +140,32 @@ def test_bench_and_scale_lists_cover_only_registered_queries():
     missing_family = [n for n in scale.FAMILY if n not in names]
     assert not missing_family, \
         f"scale FAMILY not registered: {missing_family}"
+
+
+@pytest.mark.parametrize("secs,fits", [(6.72, True), (99.99, False)])
+def test_bench_tail_checksums_names_and_keeps_summary_last(secs, fits):
+    """bench.py's last two lines over every registered query: the
+    positional per-query line carries a checksum of its name order, and the
+    summary line is last and whole. At 6.72 s per query (3-digit
+    centiseconds, the slowest per-query median recorded at sf0.1) both lines
+    fit the budget; at 99.99 s they overflow it, the summary drops every
+    slowest-extra and still fits the 2000-byte tail on its own."""
+    import hashlib
+    import json
+
+    bench = _load("bench.py", "bench_mod")
+    timings = {n: secs for n in bench.HEADLINE}
+    extra = {n: secs for n in REGISTRY if n not in timings}
+    out = {"metric": "headline_queries_total", "value": round(sum(timings.values()), 3),
+           "unit": "sec", "sf": 0.1, "passes": 3, "headline_isolated": True}
+    pq_line, tail_line = bench.tail_lines(out, timings, extra)
+
+    pq, summary = json.loads(pq_line), json.loads(tail_line)
+    names = sorted(REGISTRY)
+    assert pq["n"] == len(names)
+    assert pq["names_sha256"] == hashlib.sha256("\n".join(names).encode()).hexdigest()[:8]
+    assert summary["metric"] == out["metric"] and summary["value"] == out["value"]
+    assert summary["queries"] == timings
+    assert (len(pq_line) + len(tail_line) + 2 <= 1900) == fits
+    assert fits == bool(summary["slowest_extras"])
+    assert len(tail_line) < 2000

@@ -6,7 +6,10 @@ all-rows-land regression against the reference's quarterly last-row bug
 
 from __future__ import annotations
 
+import threading
+
 import pytest
+from pyspark.errors import AnalysisException
 
 from covid_19_data_engineering_spark import lifecycle
 from covid_19_data_engineering_spark.pipeline import run_daily, run_quarterly
@@ -70,10 +73,30 @@ def test_run_daily_quarantine(spark, tmp_path):
     p = tmp_path / "Broken_Extract.csv"
     p.write_text(BROKEN)
     results = run_daily(spark, [str(p)], schema="daily_t3")
-    assert results[0].rows_quarantined >= 1
-    assert results[0].rows_loaded >= 1  # good rows still land
-    q = spark.table("daily_t3.broken_extract_quarantine")
-    assert q.count() == results[0].rows_quarantined
+    # the quarantine branch overlaps the build write; neither count moves
+    assert (results[0].rows_loaded, results[0].rows_quarantined) == (2, 1)
+    assert spark.table("daily_t3.broken_extract_quarantine").count() == 1
+
+
+@pytest.mark.parametrize("failing", ["quarantine", "build", "both"])
+def test_run_daily_branch_failure_propagates(spark, tmp_path, monkeypatch, failing):
+    """A failure on either branch of a daily load reaches the caller (the
+    build branch's when both fail), and no branch outlives the call."""
+    schema = f"daily_fail_{failing}"
+    p = tmp_path / "Broken_Extract.csv"
+    p.write_text(BROKEN)
+    if failing in ("quarantine", "both"):
+        lifecycle.ensure_schema(spark, schema)
+        spark.sql(f"CREATE TABLE {schema}.broken_extract_quarantine (x INT) USING parquet")
+    if failing in ("build", "both"):
+        def broken_write(*args, **kwargs):
+            raise RuntimeError("build write failed")
+        monkeypatch.setattr(lifecycle, "write_build_table", broken_write)
+    expected = AnalysisException if failing == "quarantine" else RuntimeError
+    threads = threading.active_count()
+    with pytest.raises(expected):
+        run_daily(spark, [str(p)], schema=schema)
+    assert threading.active_count() == threads
 
 
 def test_run_quarterly_history_and_all_rows(spark, csv_dir):
@@ -251,6 +274,12 @@ def test_write_path_job_budget(spark, tmp_path):
     quarterly = _jobs_in_group(spark, "budget-quarterly",
                                lambda: run_quarterly(spark, [str(p)], schema="budget_q"))
     assert daily <= 8 and quarterly <= 4, (daily, quarterly)
+    # the quarantine branch runs on its own thread; its count (2 jobs) and
+    # append (1) must still land in the caller's job group
+    unquarantined = _jobs_in_group(
+        spark, "budget-daily-off",
+        lambda: run_daily(spark, [str(p)], schema="budget_d0", quarantine=False))
+    assert daily - unquarantined == 3, (daily, unquarantined)
 
     lc.ensure_schema(spark, "budget_p")
     # rename, migrate to atomic, atomic over an existing version, back to rename
