@@ -61,145 +61,6 @@ EXCLUDED: dict[str, str] = {
     #  their batch twins, which ARE registered queries and hence timed)
 }
 
-# Former pinned extras list (rounds 2-9), kept for reference in git history;
-# the derived list below supersedes it.
-_LEGACY_EXTRA = [
-    "order_price_ranks_scalable",
-    "dedup_minhash_lsh",
-    "cross_snapshot_dedup",
-    "doc_chunking",
-    "benchmark_contamination",
-    "tpch_q7_volume_shipping",
-    "tpch_q18_large_volume_customers",
-    "boilerplate_ngram_profile",
-    "pii_scrub_events",
-    "tpch_q9_product_profit",
-    "tpch_q21_waiting_suppliers",
-    "part_copurchase_pairs",
-    "source_cap_sample",
-    # round-3 additions
-    "lm_bigram_perplexity",
-    "embedding_quantize_int8",
-    "dedup_retention_manifest",
-    "grouped_map_source_zscore",
-    "events_heavy_hitters_cms",
-    "event_transition_matrix",
-    "ann_cosine_topk_int8",
-    "vocab_growth_curve",
-    "source_quality_scorecard",
-    # round-4 additions
-    "dedup_simhash",
-    "dedup_ngram_jaccard",
-    "dedup_cluster_components",
-    "incremental_retention_manifest",
-    "dup_span_profile",
-    "pagerank_copurchase",
-    "kmeans_embedding_clusters",
-    "ann_range_search",
-    "bm25_retrieval",
-    "copurchase_triangles",
-    "hybrid_rrf_retrieval",
-    "events_value_interpolation",
-    "shuffle_skew_report",
-    "fuzzy_part_name_matches",
-    "ab_conversion_ztest",
-    "dup_span_scrub",
-    "training_shard_manifest",
-    "ivf_incremental_assign",
-    "referential_integrity_report",
-    "ann_lsh_range_search",
-    "gopher_rule_gate",
-    # round-5 additions
-    "dedup_embedding_cosine",
-    # renamed in round 12 (the stored-state variant became the primary
-    # incremental_retention_manifest; the old in-query primary became
-    # _inquery) — keep the slot so round-over-round ordering is stable
-    "incremental_retention_manifest_inquery",
-    "semantic_dedup",
-    "bpe_merge_induction",
-    "bpe_vocab_tokens",
-    "dsir_importance_selection",
-    # round-6 additions
-    "bpe_merge_induction_batched",
-    "sequence_packing_manifest",
-    "zorder_file_layout",
-    "exact_price_quantiles",
-    "semantic_dedup_ivf",
-    "retrieval_quality_eval",
-    # round-8 additions
-    "embedding_random_projection",
-    "ann_projected_topk",
-    "ann_projected_recall",
-    "leakage_safe_split",
-    # round-8 continuation
-    "tpch_q6_forecast_revenue",
-    "tpch_q12_priority_lines",
-    "weighted_sample_wor",
-    "bloom_semi_join_stats",
-    "minhash_lsh_accuracy",
-    "cdc_chunk_stats",
-    "events_interval_coverage",
-    "embedding_class_separation",
-    "setsim_prefix_join",
-    "multimodal_audio_features",
-    "token_keyness_g2",
-    "pareto_frontier_parts",
-    "events_drift_js",
-    "events_rolling_anomalies",
-    "robust_price_outliers",
-    "source_overlap_matrix",
-    "ngram_novelty_profile",
-    "events_lateness_profile",
-    "events_error_control_chart",
-    "functional_dependency_profile",
-    "embedding_covariance_profile",
-    "copurchase_association_rules",
-    "orders_open_backlog_curve",
-    "session_duration_quantiles",
-    "supplier_concentration_hhi",
-    "embedding_quantile_calibration",
-    "events_ewma_smoothing",
-    "source_token_entropy",
-    "price_quantity_spearman",
-    "source_zipf_fit",
-    # round-9 additions
-    "incremental_sum_aggregate",
-    "incremental_minmax_aggregate",
-    "incremental_distinct_aggregate",
-    "incremental_join_view",
-    "events_user_hll",
-    "events_value_bootstrap_ci",
-    "events_hll_overlap",
-    "embedding_pca_power",
-    "multimodal_video_features",
-    "events_cusum_changepoint",
-    "events_ks_drift",
-    "events_acf_daily",
-    "cohort_retention_matrix",
-    "order_status_priority_independence",
-    "events_value_auc",
-    "customer_revenue_gini",
-    "customer_lifetime_km",
-    "contrastive_pair_mining",
-    "kcore_copurchase",
-    "tfidf_doc_neighbors",
-    "price_quantity_ols",
-    "events_daily_trend",
-    "purchase_attribution_linear",
-    "error_value_split_gain",
-    "events_dow_seasonality",
-    "revenue_weighted_price_quantiles",
-    "orders_benford_audit",
-    "token_pmi_collocations",
-    "rfm_customer_segments",
-    "event_markov_stationary",
-    "events_sprt_conversion",
-    "event_top_paths",
-    "embedding_prototype_accuracy",
-    "conversion_latency_quantiles",
-    "monthly_revenue_growth",
-]
-
 
 def _run_headline_isolated(n_passes: int) -> tuple[dict, dict]:
     """Time the headline batch in a FRESH subprocess (its own JVM/session).
@@ -300,16 +161,10 @@ def main() -> None:
     queries = all_queries()
     names = [n for n in HEADLINE if n in queries]
     # extras DERIVED from the registry: every registered query outside the
-    # headline is timed unless explicitly excluded with a logged reason.
-    # _LEGACY_EXTRA's round order is kept as a stable prefix (round-over-
-    # round per-query comparability); queries never before timed append in
-    # sorted order after it.
-    legacy = [n for n in _LEGACY_EXTRA
-              if n in queries and n not in HEADLINE and n not in EXCLUDED]
-    newly = sorted(n for n in queries
-                   if n not in HEADLINE and n not in EXCLUDED
-                   and n not in legacy)
-    extra_names = legacy + newly
+    # headline is timed, in sorted-name order, unless explicitly excluded
+    # with a logged reason.
+    extra_names = sorted(n for n in queries
+                         if n not in HEADLINE and n not in EXCLUDED)
     for name, reason in EXCLUDED.items():
         print(f"# bench: excluded {name}: {reason}", file=sys.stderr)
     override = os.environ.get("SPARK_GRAFT_BENCH_QUERIES")

@@ -170,33 +170,29 @@ def spark_type_for(type_name: str) -> T.DataType:
     return _SPARK_TYPES[type_name]
 
 
-def infer_table_schema(df: DataFrame, mode: str = "sample",
-                       row_count: int | None = None) -> dict[str, str]:
+def infer_table_schema(df: DataFrame, mode: str = "sample") -> dict[str, str]:
     """Infer {column -> type name} for an all-string DataFrame."""
     if mode == "sample":
-        return _infer_by_sampling(df, row_count)
+        return _infer_by_sampling(df)
     if mode == "full":
         return _infer_full_scan(df)
     raise ValueError(f"unknown inference mode {mode!r}")
 
 
-def _infer_by_sampling(df: DataFrame, row_count: int | None) -> dict[str, str]:
+def _infer_by_sampling(df: DataFrame) -> dict[str, str]:
     """ONE bounded Spark job for the whole table, not one per column: a
     slice of every column is collected together and each cell classified
     driver-side by the exact reference kernel (``classify_value``; the JVM
     ``_classify_expr`` approximation is reserved for full-scan mode).
 
-    Without ``row_count`` the slice is 10,001 rows, one past the largest
-    table ``sample_limit`` keeps whole: its length picks the tier and its
-    prefix is the sample. So no count scan runs, and only rows that parse
-    are counted (a count over a DROPMALFORMED CSV read skips parsing and
-    counts malformed rows too). Nulls are filtered per column on the slice:
-    a column whose sampled rows are all NULL resolves to text."""
-    if row_count is None:
-        rows = df.limit(10_001).collect()
-        rows = rows[:sample_limit(len(rows))]
-    else:
-        rows = df.limit(sample_limit(row_count)).collect()
+    The slice is 10,001 rows, one past the largest table ``sample_limit``
+    keeps whole: its length picks the tier and its prefix is the sample.
+    So no count scan runs, and only rows that parse are counted (a count
+    over a DROPMALFORMED CSV read skips parsing and counts malformed rows
+    too). Nulls are filtered per column on the slice: a column whose
+    sampled rows are all NULL resolves to text."""
+    rows = df.limit(10_001).collect()
+    rows = rows[:sample_limit(len(rows))]
     resolved: dict[str, str] = {}
     for i, column in enumerate(df.columns):
         labels = {

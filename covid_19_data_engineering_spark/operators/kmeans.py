@@ -36,12 +36,15 @@ changes.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from covid_19_data_engineering_spark.operators.vectors import (
-    COORD_UNIT,
     lloyd_update,
+    lloyd_update_sql,
     nearest_centroids,
+    nearest_centroids_sql,
+    sqdist,
+    sqdist_sql,
 )
 from covid_19_data_engineering_spark.plans.registry import register
 from covid_19_data_engineering_spark.sources.tables import load_table
@@ -49,13 +52,6 @@ from covid_19_data_engineering_spark.sources.tables import load_table
 KM_K = 8
 KM_DIM = 64
 DIST_UNIT = 1_000_000_000     # distance fixed-point: 1e-9
-
-
-def _sqdist(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0), lambda acc, v: acc + v,
-    )
 
 
 def kmeans_assignments(emb: DataFrame, k: int = KM_K) -> DataFrame:
@@ -73,7 +69,7 @@ def kmeans_assignments(emb: DataFrame, k: int = KM_K) -> DataFrame:
 
     def assign(cents: DataFrame) -> DataFrame:
         carr = cents.agg(F.collect_list(F.struct("cid", "c")).alias("cs"))
-        best = nearest_centroids(F.col("e"), F.col("cs"), _sqdist, 1)
+        best = nearest_centroids(F.col("e"), F.col("cs"), sqdist, 1)
         return (
             corpus.crossJoin(F.broadcast(carr))
             .select("vec_id", "e", best.alias("best"))
@@ -82,13 +78,6 @@ def kmeans_assignments(emb: DataFrame, k: int = KM_K) -> DataFrame:
         )
 
     return assign(lloyd_update(assign(cent0), ["cid"], "e"))
-
-
-def _sqdist_sql(v: str, c: str, dim: int = KM_DIM) -> str:
-    """DuckDB twin of ``_sqdist``: the same left fold in index order."""
-    return (f"list_reduce(list_transform(range(1, {dim} + 1), "
-            f"i -> ({v}[i] - {c}[i]) * ({v}[i] - {c}[i])), "
-            "(a, b) -> a + b)")
 
 
 def kmeans_stats(emb: DataFrame, k: int = KM_K) -> DataFrame:
@@ -116,58 +105,39 @@ def kmeans_stats(emb: DataFrame, k: int = KM_K) -> DataFrame:
 _EMB_SQL_DEFAULT = "SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings"
 
 
-def kmeans_cte_chain(k_expr: str = str(KM_K), emb_sql: str = _EMB_SQL_DEFAULT) -> str:
+def kmeans_cte_chain(k_expr: str = str(KM_K), emb_sql: str = _EMB_SQL_DEFAULT,
+                     prefix: str = "", dim: int = KM_DIM) -> str:
     """The shared DuckDB CTE chain through the final assignment ``a2``
     (vec_id, e, cid, dist) — composed into a WITH clause by this module's
-    stats oracle and the semantic-dedup oracle (operators/semdedup.py).
+    stats oracle, the semantic-dedup oracle (operators/semdedup.py) and
+    the PQ codebook oracles (operators/pq.py, one chain per subspace).
 
     ``k_expr`` renders K as a SQL expression over ``n_all`` (the corpus
     row count, in scope inside cent0): the stats query pins the literal
     {KM_K}; semantic dedup derives K from corpus size so its
     within-cluster pair search stays bounded as the corpus grows.
 
-    ``emb_sql`` overrides the corpus source (columns vec_id, e DOUBLE[]):
-    semantic dedup clusters its exact-embedding-collapsed representative
-    set, not the raw table."""
-
-    return f"""emb AS ({emb_sql}),
-    cent0 AS (
+    ``emb_sql`` overrides the corpus source (columns vec_id, e DOUBLE[]
+    of ``dim`` elements): semantic dedup clusters its
+    exact-embedding-collapsed representative set, PQ one subspace slice.
+    ``prefix`` is prepended to every CTE name so several chains can
+    share one WITH clause."""
+    p = prefix
+    sq = sqdist_sql("v.e", "c.c", dim)
+    return f"""{p}emb AS ({emb_sql}),
+    {p}cent0 AS (
       SELECT vec_id AS cid, e AS c FROM (
         SELECT vec_id, e,
                ROW_NUMBER() OVER (ORDER BY vec_id) AS rn,
                COUNT(*) OVER () AS n_all
-        FROM emb
+        FROM {p}emb
       ) WHERE rn <= {k_expr}
     ),
-    a1 AS (
-      SELECT vec_id, e, cid FROM (
-        SELECT v.vec_id, v.e, c.cid,
-               ROW_NUMBER() OVER (PARTITION BY v.vec_id
-                                  ORDER BY {_sqdist_sql('v.e', 'c.c')}, c.cid) AS rn
-        FROM emb v CROSS JOIN cent0 c
-      ) WHERE rn = 1
-    ),
-    upd AS (
-      SELECT cid, pos,
-             CAST(SUM(CAST(floor(val * {COORD_UNIT}) AS BIGINT)) AS BIGINT) AS su,
-             COUNT(*) AS cnt
-      FROM (SELECT cid, unnest(range(1, {KM_DIM} + 1)) AS pos, unnest(e) AS val
-            FROM a1)
-      GROUP BY cid, pos
-    ),
-    cent1 AS (
-      SELECT cid,
-             list(CAST(su AS DOUBLE) / cnt / {COORD_UNIT} ORDER BY pos) AS c
-      FROM upd GROUP BY cid
-    ),
-    a2 AS (
-      SELECT vec_id, e, cid, dist FROM (
-        SELECT v.vec_id, v.e, c.cid, {_sqdist_sql('v.e', 'c.c')} AS dist,
-               ROW_NUMBER() OVER (PARTITION BY v.vec_id
-                                  ORDER BY {_sqdist_sql('v.e', 'c.c')}, c.cid) AS rn
-        FROM emb v CROSS JOIN cent1 c
-      ) WHERE rn = 1
-    )"""
+    {p}a1 AS ({nearest_centroids_sql(f"{p}emb", f"{p}cent0", sq,
+                                     cols="v.vec_id, v.e, c.cid")}),
+    {p}cent1 AS ({lloyd_update_sql(f"{p}a1", "cid", dim=dim)}),
+    {p}a2 AS ({nearest_centroids_sql(f"{p}emb", f"{p}cent1", sq,
+                                     cols="v.vec_id, v.e, c.cid")})"""
 
 
 def _kmeans_oracle_sql() -> str:

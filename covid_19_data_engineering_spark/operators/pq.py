@@ -62,13 +62,13 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 
 from covid_19_data_engineering_spark.operators.kmeans import (
     DIST_UNIT,
-    _sqdist,
-    _sqdist_sql,
+    kmeans_cte_chain,
 )
 from covid_19_data_engineering_spark.operators.vectors import (
-    COORD_UNIT,
     lloyd_update,
     nearest_centroids,
+    sqdist,
+    sqdist_sql,
 )
 from covid_19_data_engineering_spark.plans.registry import register
 from covid_19_data_engineering_spark.sources.tables import load_table
@@ -127,7 +127,7 @@ def _adc_scored(emb: DataFrame, q: list, m: int, subdim: int,
     )
     assigned = sub.join(F.broadcast(cent0), "s").select(
         "s", "es",
-        nearest_centroids(F.col("es"), F.col("cs"), _sqdist, 1)["cid"]
+        nearest_centroids(F.col("es"), F.col("cs"), sqdist, 1)["cid"]
         .alias("cid"),
     )
     # one (s, cid, pos)-keyed shuffle covers every subspace's codebook
@@ -142,8 +142,8 @@ def _adc_scored(emb: DataFrame, q: list, m: int, subdim: int,
     books = (
         cent1.select(
             "s", "cid", "c",
-            _sqdist(F.element_at(qslices, F.col("s") + 1),
-                    F.col("c")).alias("dq"),
+            sqdist(F.element_at(qslices, F.col("s") + 1),
+                   F.col("c")).alias("dq"),
         )
         .groupBy("s")
         .agg(F.collect_list(F.struct("cid", "c", "dq")).alias("cs"))
@@ -157,7 +157,7 @@ def _adc_scored(emb: DataFrame, q: list, m: int, subdim: int,
         F.col("books"),
         lambda b: nearest_centroids(
             F.slice(F.col("e"), b["s"] * subdim + 1, subdim), b["cs"],
-            _sqdist, 1, "dq")["dq"],
+            sqdist, 1, "dq")["dq"],
     )
     approx = F.aggregate(dq_per_s, F.lit(0.0), lambda acc, v: acc + v)
     return (
@@ -182,7 +182,7 @@ def pq_adc_topk(emb: DataFrame, query_vec: list,
         .select(
             "vec_id",
             "approx_dist_units",
-            F.floor(_sqdist(F.col("e"), qfull) * DIST_UNIT).cast("long")
+            F.floor(sqdist(F.col("e"), qfull) * DIST_UNIT).cast("long")
             .alias("true_dist_units"),
         )
         .orderBy("approx_dist_units", "vec_id")
@@ -213,7 +213,7 @@ def pq_rerank_topk(emb: DataFrame, query_vec: list, k: int = PQ_TOPK,
         short.select(
             "vec_id",
             "approx_dist_units",
-            F.floor(_sqdist(F.col("e"), qfull) * DIST_UNIT).cast("long")
+            F.floor(sqdist(F.col("e"), qfull) * DIST_UNIT).cast("long")
             .alias("true_dist_units"),
         )
         .orderBy("true_dist_units", "vec_id")
@@ -224,83 +224,37 @@ def pq_rerank_topk(emb: DataFrame, query_vec: list, k: int = PQ_TOPK,
         "rank", "vec_id", "approx_dist_units", "true_dist_units")
 
 
-def _pq_chain_sql(s: int, subdim: int = PQ_SUBDIM,
-                  k_cent: int = PQ_K) -> str:
-    """DuckDB CTE chain for subspace ``s``: slice -> cent0 -> a1 ->
-    integer-exact update -> cent1 + the per-centroid query-distance
-    table — the kmeans_cte_chain pattern at dim ``subdim`` with
-    prefixed names."""
-    lo, hi = s * subdim + 1, (s + 1) * subdim
-
-    def sqd(v: str, c: str) -> str:
-        return _sqdist_sql(v, c, subdim)
-
-    return f"""s{s}_emb AS (
-      SELECT vec_id, list_slice(e, {lo}, {hi}) AS e FROM corpus
-    ),
-    s{s}_cent0 AS (
-      SELECT vec_id AS cid, e AS c FROM (
-        SELECT vec_id, e, ROW_NUMBER() OVER (ORDER BY vec_id) AS rn
-        FROM s{s}_emb
-      ) WHERE rn <= {k_cent}
-    ),
-    s{s}_a1 AS (
-      SELECT vec_id, e, cid FROM (
-        SELECT v.vec_id, v.e, c.cid,
-               ROW_NUMBER() OVER (PARTITION BY v.vec_id
-                                  ORDER BY {sqd('v.e', 'c.c')}, c.cid) AS rn
-        FROM s{s}_emb v CROSS JOIN s{s}_cent0 c
-      ) WHERE rn = 1
-    ),
-    s{s}_upd AS (
-      SELECT cid, pos,
-             CAST(SUM(CAST(floor(val * {COORD_UNIT}) AS BIGINT)) AS BIGINT)
-               AS su,
-             COUNT(*) AS cnt
-      FROM (SELECT cid, unnest(range(1, {subdim} + 1)) AS pos,
-                   unnest(e) AS val
-            FROM s{s}_a1)
-      GROUP BY cid, pos
-    ),
-    s{s}_cent1 AS (
-      SELECT cid,
-             list(CAST(su AS DOUBLE) / cnt / {COORD_UNIT} ORDER BY pos) AS c
-      FROM s{s}_upd GROUP BY cid
-    ),
-    s{s}_code AS (
-      SELECT vec_id, cid FROM (
-        SELECT v.vec_id, c.cid,
-               ROW_NUMBER() OVER (PARTITION BY v.vec_id
-                                  ORDER BY {sqd('v.e', 'c.c')}, c.cid) AS rn
-        FROM s{s}_emb v CROSS JOIN s{s}_cent1 c
-      ) WHERE rn = 1
-    ),
+def _pq_scored_sql(m: int, subdim: int, k_cent: int) -> str:
+    """Shared oracle prelude: qfull/q{s}/corpus CTEs, then per subspace
+    ``s`` the k-means chain over the slice (CTE names prefixed ``s{s}_``;
+    its ``a2`` assignment is the code) and the per-centroid
+    query-distance table ``s{s}_tab``, ending in
+    ``scored(vec_id, approx_dist_units, true_dist_units)``."""
+    def chain(s: int) -> str:
+        lo, hi = s * subdim + 1, (s + 1) * subdim
+        book = kmeans_cte_chain(
+            str(k_cent),
+            emb_sql=f"SELECT vec_id, list_slice(e, {lo}, {hi}) AS e FROM corpus",
+            prefix=f"s{s}_", dim=subdim)
+        return f"""{book},
     s{s}_tab AS (
       -- the query row CROSS JOINs in: DuckDB forbids subqueries inside
       -- lambda expressions, so the query subvector must be a plain column
-      SELECT c.cid, {sqd('qv.qs', 'c.c')} AS dq
+      SELECT c.cid, {sqdist_sql('qv.qs', 'c.c', subdim)} AS dq
       FROM s{s}_cent1 c CROSS JOIN q{s} qv
     )"""
 
-
-def _pq_scored_sql(m: int, subdim: int, k_cent: int) -> str:
-    """Shared oracle prelude: qfull/q{s}/corpus/chains/scored CTEs ending
-    in ``scored(vec_id, approx_dist_units, true_dist_units)``."""
-    dim = m * subdim
-    full_sqd = (f"list_reduce(list_transform(range(1, {dim} + 1), "
-                "i -> (v.e[i] - qf.qe[i]) * (v.e[i] - qf.qe[i])), "
-                "(a, b) -> a + b)")
-    chains = ",\n    ".join(
-        _pq_chain_sql(s, subdim, k_cent) for s in range(m))
+    chains = ",\n    ".join(chain(s) for s in range(m))
     qsubs = ",\n    ".join(
         f"q{s} AS (SELECT list_slice(qe, {s * subdim + 1}, "
         f"{(s + 1) * subdim}) AS qs FROM qfull)"
         for s in range(m))
     code_joins = "\n        ".join(
-        f"JOIN s{s}_code c{s} USING (vec_id) "
+        f"JOIN s{s}_a2 c{s} USING (vec_id) "
         f"JOIN s{s}_tab t{s} ON t{s}.cid = c{s}.cid"
         for s in range(m))
     approx = " + ".join(f"t{s}.dq" for s in range(m))
+    true_sqd = sqdist_sql("v.e", "qf.qe", m * subdim)
     return f"""
     WITH qfull AS (
       SELECT CAST(embedding AS DOUBLE[]) AS qe FROM embeddings
@@ -316,7 +270,7 @@ def _pq_scored_sql(m: int, subdim: int, k_cent: int) -> str:
       SELECT v.vec_id,
              CAST(floor(({approx}) * {DIST_UNIT}) AS BIGINT)
                AS approx_dist_units,
-             CAST(floor(({full_sqd}) * {DIST_UNIT}) AS BIGINT)
+             CAST(floor(({true_sqd}) * {DIST_UNIT}) AS BIGINT)
                AS true_dist_units
       FROM corpus v CROSS JOIN qfull qf
         {code_joins}

@@ -6,14 +6,16 @@ labeling/embedding pipeline runs to ask "are these classes linearly
 separated enough to trust?" — beside ``embedding_class_separation``'s
 distance-ratio readout.
 
-Determinism (kmeans.py's recipe): prototype components are exact
-fixed-point — per-(label, dim) sums of floor(x * 1e6) in BIGINT (floor,
-not round: round's half-tie is the one op engines could disagree on),
-one exact double division per component. The distance is the explicit
-zip_with/aggregate left fold over double-cast arrays (DuckDB replays it
-with list_reduce), and the argmin breaks ties by label.
+Determinism (kmeans.py's recipe): the prototypes are the shared
+fixed-point Lloyd update (``operators/vectors.py`` ``lloyd_update``:
+per-(label, dim) BIGINT sums of floor(x * 1e6), one exact double
+division per component) keyed by label, and classification is the
+shared nearest-centroid kernel (``nearest_centroids`` with the
+left-fold squared L2) with the label as the centroid id, so a distance
+tie goes to the lower label. The oracle replays both through their SQL
+twins.
 
-100 TB shape: prototypes reduce via ONE (label, dim)-keyed map-side-
+100 TB shape: prototypes reduce via the (label, dim)-keyed map-side-
 combined shuffle (<= labels * 64 groups); classification is a MAP-ONLY
 projection against the single broadcast prototype row (array_min over
 L struct elements inside whole-stage codegen — no per-prototype row
@@ -26,44 +28,36 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from covid_19_data_engineering_spark.operators.vectors import (
+    lloyd_update,
+    lloyd_update_sql,
+    nearest_centroids,
+    nearest_centroids_sql,
+    sqdist,
+    sqdist_sql,
+)
 from covid_19_data_engineering_spark.plans.registry import register
 from covid_19_data_engineering_spark.sources.tables import load_table
 
 PROTO_DIM = 64
-_P_FX = 1_000_000
 
 
-def prototype_confusion(emb: DataFrame, dim: int = PROTO_DIM) -> DataFrame:
+def prototype_confusion(emb: DataFrame) -> DataFrame:
     """(true_label, pred_label, n, accuracy) — nearest-prototype
     confusion census; accuracy (trace share) repeated per row."""
     emb = emb.select(
         "label", F.col("embedding").cast("array<double>").alias("e")
     )
-    sums = emb.groupBy("label").agg(
-        F.count(F.lit(1)).alias("cnt"),
-        *[F.sum(F.expr(f"CAST(floor(e[{i}] * {_P_FX}) AS BIGINT)"))
-          .alias(f"s{i}") for i in range(dim)],
+    one_row = lloyd_update(emb, ["label"], "e").agg(
+        F.collect_list(F.struct(F.col("label").alias("cid"), "c"))
+        .alias("ps")
     )
-    protos = sums.select(
-        "label",
-        F.array(*[
-            F.expr(f"(CAST(s{i} AS DOUBLE) / cnt) / {_P_FX}.0")
-            for i in range(dim)
-        ]).alias("proto"),
-    )
-    one_row = protos.agg(
-        F.array_sort(F.collect_list(F.struct("label", "proto"))).alias("ps")
-    )
-    dist = ("aggregate(zip_with(e, p.proto, (x, y) -> (x - y) * (x - y)), "
-            "0D, (a, b) -> a + b)")
     classified = (
         emb.crossJoin(F.broadcast(one_row))
         .select(
             F.col("label").alias("true_label"),
-            F.expr(
-                f"array_min(transform(ps, p -> struct({dist} AS d, "
-                "p.label AS l))).l"
-            ).alias("pred_label"),
+            nearest_centroids(F.col("e"), F.col("ps"), sqdist, 1)["cid"]
+            .alias("pred_label"),
         )
     )
     conf = classified.groupBy("true_label", "pred_label").agg(
@@ -89,38 +83,18 @@ def prototype_confusion(emb: DataFrame, dim: int = PROTO_DIM) -> DataFrame:
     "embedding_prototype_accuracy",
     oracle=f"""
     WITH emb AS (
-      SELECT label, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
+      SELECT label, CAST(embedding AS DOUBLE[]) AS e,
+             ROW_NUMBER() OVER () AS rid
+      FROM embeddings
     ),
-    comp AS (
-      SELECT label, CAST(t.d AS INTEGER) AS d,
-             CAST(SUM(CAST(floor(e[CAST(t.d AS INTEGER)] * {_P_FX})
-                           AS BIGINT)) AS BIGINT) AS s,
-             CAST(COUNT(*) AS BIGINT) AS cnt
-      FROM emb CROSS JOIN range(1, {PROTO_DIM} + 1) AS t(d)
-      GROUP BY label, t.d
-    ),
-    protos AS (
-      SELECT label,
-             list((CAST(s AS DOUBLE) / cnt) / {_P_FX}.0 ORDER BY d)
-               AS proto
-      FROM comp GROUP BY label
-    ),
-    scored AS (
-      SELECT m.label AS true_label, p.label AS pl,
-             list_reduce(list_transform(range(1, {PROTO_DIM} + 1),
-                 i -> (m.e[i] - p.proto[i]) * (m.e[i] - p.proto[i])),
-                 (a, b) -> a + b) AS d2,
-             ROW_NUMBER() OVER (
-               PARTITION BY m.rowid_key
-               ORDER BY list_reduce(list_transform(range(1, {PROTO_DIM} + 1),
-                 i -> (m.e[i] - p.proto[i]) * (m.e[i] - p.proto[i])),
-                 (a, b) -> a + b), p.label) AS rk
-      FROM (SELECT label, e, ROW_NUMBER() OVER () AS rowid_key FROM emb) m
-      CROSS JOIN protos p
-    ),
+    protos AS ({lloyd_update_sql("emb", "label", dim=PROTO_DIM)}),
+    scored AS ({nearest_centroids_sql(
+        "emb", "protos", sqdist_sql("v.e", "c.c", PROTO_DIM),
+        cols="v.label AS true_label, c.label AS pred_label",
+        key="v.rid", cid="c.label")}),
     conf AS (
-      SELECT true_label, pl AS pred_label, CAST(COUNT(*) AS BIGINT) AS n
-      FROM scored WHERE rk = 1
+      SELECT true_label, pred_label, CAST(COUNT(*) AS BIGINT) AS n
+      FROM scored
       GROUP BY 1, 2
     ),
     acc AS (

@@ -101,8 +101,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from covid_19_data_engineering_spark.operators.kmeans import (
     KM_DIM,
     KM_K,
-    _sqdist,
-    _sqdist_sql,
     kmeans_assignments,
     kmeans_cte_chain,
 )
@@ -110,11 +108,14 @@ from covid_19_data_engineering_spark.operators.lineage import (
     truncate as _truncate,
 )
 from covid_19_data_engineering_spark.operators.vectors import (
-    COORD_UNIT,
     _planes_lit,
     fold_cosine_sql,
     lloyd_update,
+    lloyd_update_sql,
     nearest_centroids,
+    nearest_centroids_sql,
+    sqdist,
+    sqdist_sql,
 )
 from covid_19_data_engineering_spark.plans.registry import register
 from covid_19_data_engineering_spark.sources.tables import load_table
@@ -291,7 +292,7 @@ def _ivf_assigned(reps: DataFrame, n_reps: int,
     )
     coarse = corpus.crossJoin(F.broadcast(c0)).select(
         "vec_id", "e",
-        nearest_centroids(F.col("e"), F.col("cs"), _sqdist, 1)["cid"]
+        nearest_centroids(F.col("e"), F.col("cs"), sqdist, 1)["cid"]
         .alias("ccid"))
     cnt_w = Window.partitionBy("ccid")
     rn_w = Window.partitionBy("ccid").orderBy("vec_id")
@@ -317,7 +318,7 @@ def _ivf_assigned(reps: DataFrame, n_reps: int,
         # order does not matter
         fs = fcent.groupBy("ccid").agg(F.collect_list(F.struct(
             F.col("fcid").alias("cid"), "c")).alias("cs"))
-        best = nearest_centroids(F.col("e"), F.col("cs"), _sqdist, 1)
+        best = nearest_centroids(F.col("e"), F.col("cs"), sqdist, 1)
         return (
             members.join(fs, "ccid")
             .select("vec_id", "e", "ccid", best.alias("best"))
@@ -568,21 +569,28 @@ def _flat_cells_select() -> str:
     return "SELECT vec_id, e, CAST(cid AS VARCHAR) AS cell, dist FROM a2"
 
 
+def _fine_nearest(cents: str,
+                  cols: str = "v.vec_id, v.e, v.ccid, c.fcid") -> str:
+    """Each ``seeded`` vector's nearest fine centroid of ``cents``
+    (ccid, fcid, c), searched only within its own coarse cell."""
+    return nearest_centroids_sql(
+        "seeded", cents, sqdist_sql("v.e", "c.c", KM_DIM), cols=cols,
+        cid="c.fcid", on="c.ccid = v.ccid")
+
+
 def _ivf_chain_sql() -> str:
     """The IVF quantizer's CTE chain (reps -> c0 -> coarse -> seeded ->
-    fseeds -> fa1 -> fupd -> fcent1 -> [fa_r/fupd_r/fcentraw_r/fmove_r/
-    fcent_r]*) — shared by the ivf-only and the auto-switch oracles.
-    Round 1 replays the engine's unconditional Lloyd update off the
-    seeded Voronoi assignment with the identical su/cnt fixed-point
-    arithmetic as the flat kmeans chain; rounds 2..SEM_IVF_LLOYD_ROUNDS
-    replay the convergence protocol — fmove_r computes the max
-    per-centroid squared movement in exact SEM_IVF_MOVE_UNIT fixed point
-    and fcent_r keeps the PREVIOUS centroids when it is below
-    SEM_IVF_MOVE_EPS_FP (guarded mutually exclusive UNION branches, the
-    same replay idiom as the flat/IVF auto switch)."""
+    fseeds -> fa1 -> fcent1 -> [fa_r/fcentraw_r/fmove_r/fcent_r]*) —
+    shared by the ivf-only and the auto-switch oracles. Round 1 replays
+    the engine's unconditional Lloyd update off the seeded Voronoi
+    assignment; rounds 2..SEM_IVF_LLOYD_ROUNDS replay the convergence
+    protocol — fmove_r computes the max per-centroid squared movement in
+    exact SEM_IVF_MOVE_UNIT fixed point and fcent_r keeps the PREVIOUS
+    centroids when it is below SEM_IVF_MOVE_EPS_FP (guarded mutually
+    exclusive UNION branches, the same replay idiom as the flat/IVF auto
+    switch). Fine centroids ``c`` are keyed (ccid, fcid); a vector only
+    meets the fine centroids of its coarse cell."""
     t = SEM_CLUSTER_TARGET
-    sq = _sqdist_sql
-
     head = f"""reps AS MATERIALIZED (SELECT vec_id, e FROM withrep WHERE vec_id = rep),
     c0 AS (
       SELECT vec_id AS cid, e AS c FROM (
@@ -593,14 +601,9 @@ def _ivf_chain_sql() -> str:
       ) WHERE rn <= CAST(ceil(sqrt(CAST(greatest({KM_K}, n_all // {t})
                                         AS DOUBLE))) AS BIGINT)
     ),
-    coarse AS MATERIALIZED (
-      SELECT vec_id, e, ccid FROM (
-        SELECT v.vec_id, v.e, c.cid AS ccid,
-               ROW_NUMBER() OVER (PARTITION BY v.vec_id
-                                  ORDER BY {sq('v.e', 'c.c')}, c.cid) AS rn
-        FROM reps v CROSS JOIN c0 c
-      ) WHERE rn = 1
-    ),
+    coarse AS MATERIALIZED ({nearest_centroids_sql(
+        "reps", "c0", sqdist_sql("v.e", "c.c", KM_DIM),
+        cols="v.vec_id, v.e, c.cid AS ccid")}),
     seeded AS MATERIALIZED (
       SELECT vec_id, e, ccid,
              COUNT(*) OVER (PARTITION BY ccid) AS _ccnt,
@@ -608,63 +611,22 @@ def _ivf_chain_sql() -> str:
       FROM coarse
     ),
     fseeds AS MATERIALIZED (
-      SELECT ccid, vec_id AS fcid, e AS fc FROM seeded
+      SELECT ccid, vec_id AS fcid, e AS c FROM seeded
       WHERE _crn <= (_ccnt + {t} - 1) // {t}
     ),
-    fa1 AS MATERIALIZED (
-      SELECT vec_id, e, ccid, fcid FROM (
-        SELECT m.vec_id, m.e, m.ccid, f.fcid,
-               ROW_NUMBER() OVER (PARTITION BY m.vec_id
-                                  ORDER BY {sq('m.e', 'f.fc')}, f.fcid) AS rn
-        FROM seeded m JOIN fseeds f ON f.ccid = m.ccid
-      ) WHERE rn = 1
-    ),
-    fupd AS MATERIALIZED (
-      SELECT ccid, fcid, pos,
-             CAST(SUM(CAST(floor(val * {COORD_UNIT}) AS BIGINT)) AS BIGINT)
-               AS su,
-             COUNT(*) AS cnt
-      FROM (SELECT ccid, fcid, unnest(range(1, {KM_DIM} + 1)) AS pos,
-                   unnest(e) AS val
-            FROM fa1)
-      GROUP BY ccid, fcid, pos
-    ),
-    fcent1 AS MATERIALIZED (
-      SELECT ccid, fcid,
-             list(CAST(su AS DOUBLE) / cnt / {COORD_UNIT} ORDER BY pos) AS fc
-      FROM fupd GROUP BY ccid, fcid
-    )"""
+    fa1 AS MATERIALIZED ({_fine_nearest("fseeds")}),
+    fcent1 AS MATERIALIZED ({lloyd_update_sql("fa1", "ccid, fcid", dim=KM_DIM)})"""
     rounds = []
     for r in range(2, SEM_IVF_LLOYD_ROUNDS + 1):
         prev = f"fcent{r - 1}"
         rounds.append(f""",
-    fa{r} AS MATERIALIZED (
-      SELECT vec_id, e, ccid, fcid FROM (
-        SELECT m.vec_id, m.e, m.ccid, f.fcid,
-               ROW_NUMBER() OVER (PARTITION BY m.vec_id
-                                  ORDER BY {sq('m.e', 'f.fc')}, f.fcid) AS rn
-        FROM seeded m JOIN {prev} f ON f.ccid = m.ccid
-      ) WHERE rn = 1
-    ),
-    fupd{r} AS MATERIALIZED (
-      SELECT ccid, fcid, pos,
-             CAST(SUM(CAST(floor(val * {COORD_UNIT}) AS BIGINT)) AS BIGINT)
-               AS su,
-             COUNT(*) AS cnt
-      FROM (SELECT ccid, fcid, unnest(range(1, {KM_DIM} + 1)) AS pos,
-                   unnest(e) AS val
-            FROM fa{r})
-      GROUP BY ccid, fcid, pos
-    ),
-    fcentraw{r} AS MATERIALIZED (
-      SELECT ccid, fcid,
-             list(CAST(su AS DOUBLE) / cnt / {COORD_UNIT} ORDER BY pos) AS fc
-      FROM fupd{r} GROUP BY ccid, fcid
-    ),
+    fa{r} AS MATERIALIZED ({_fine_nearest(prev)}),
+    fcentraw{r} AS MATERIALIZED ({lloyd_update_sql(f"fa{r}", "ccid, fcid",
+                                                   dim=KM_DIM)}),
     fmove{r} AS MATERIALIZED (
       SELECT COALESCE(MAX(list_reduce(
                list_transform(range(1, {KM_DIM} + 1),
-                 i -> CAST(floor(((n.fc[i] - o.fc[i]) * (n.fc[i] - o.fc[i]))
+                 i -> CAST(floor(((n.c[i] - o.c[i]) * (n.c[i] - o.c[i]))
                                  * {float(SEM_IVF_MOVE_UNIT)} + 0.5)
                            AS BIGINT)),
                (a, b) -> a + b)), 0) AS mx
@@ -672,27 +634,20 @@ def _ivf_chain_sql() -> str:
         ON o.ccid = n.ccid AND o.fcid = n.fcid
     ),
     fcent{r} AS MATERIALIZED (
-      SELECT ccid, fcid, fc FROM {prev}
+      SELECT ccid, fcid, c FROM {prev}
       WHERE (SELECT mx FROM fmove{r}) < {SEM_IVF_MOVE_EPS_FP}
       UNION ALL
-      SELECT ccid, fcid, fc FROM fcentraw{r}
+      SELECT ccid, fcid, c FROM fcentraw{r}
       WHERE (SELECT mx FROM fmove{r}) >= {SEM_IVF_MOVE_EPS_FP}
     )""")
     return head + "".join(rounds)
 
 
 def _ivf_cells_select() -> str:
-    sq = _sqdist_sql
-    final = f"fcent{SEM_IVF_LLOYD_ROUNDS}"
-    return f"""SELECT vec_id, e, cell, dist FROM (
-        SELECT m.vec_id, m.e,
-               CAST(m.ccid AS VARCHAR) || ':' || CAST(f.fcid AS VARCHAR)
-                 AS cell,
-               {sq('m.e', 'f.fc')} AS dist,
-               ROW_NUMBER() OVER (PARTITION BY m.vec_id
-                                  ORDER BY {sq('m.e', 'f.fc')}, f.fcid) AS rn
-        FROM seeded m JOIN {final} f ON f.ccid = m.ccid
-      ) WHERE rn = 1"""
+    return _fine_nearest(
+        f"fcent{SEM_IVF_LLOYD_ROUNDS}",
+        cols="v.vec_id, v.e, CAST(v.ccid AS VARCHAR) || ':' || "
+             "CAST(c.fcid AS VARCHAR) AS cell")
 
 
 def _semantic_dedup_ivf_oracle_sql() -> str:

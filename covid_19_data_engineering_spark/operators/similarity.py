@@ -35,6 +35,7 @@ from covid_19_data_engineering_spark.operators.vectors import (
     cosine_sim,
     lsh_bucket_ctes,
     nearest_centroids,
+    nearest_centroids_sql,
     with_lsh_buckets,
 )
 from covid_19_data_engineering_spark.plans.registry import register
@@ -213,52 +214,47 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = TOP_K,
     )
 
 
-def _ivf_ctes() -> str:
-    """The deterministic IVF pipeline as a reusable DuckDB CTE chain
-    (emb -> seeds -> one Lloyd step -> inverted lists -> probes ->
-    candidates -> exact-rescored pairs) — shared by the top-k oracle and
-    the recall audit. Everything is deterministic — seeds are the k
-    lowest-id vectors, cid order is the lexicographic array order, one
-    Lloyd step is plain AVG per component, and every argmax tie-breaks
-    on cid — so SQL replays it stage by stage."""
+# the IVF rank: nearest on the negated cosine, the order the Spark
+# kernel ranks on (negation is exact, so ties still go to the lower cid)
+_NEG_COS_SQL = f"-{fold_cosine_sql('v.e', 'c.c')}"
+
+
+def _ivf_index_ctes(where: str = "TRUE") -> str:
+    """The deterministic IVF quantizer and its inverted lists as a DuckDB
+    CTE chain over the embeddings rows matching ``where`` (emb -> seeds
+    -> a1 -> cents -> inv). Seeds are the k lowest-id vectors, cid order
+    is the lexicographic array order, the one Lloyd step is plain AVG
+    per component, and every nearest-cell rank ties to the lower cid, so
+    SQL replays ``ivf_centroids`` + ``_assign_cells`` stage by stage."""
     avgs = ", ".join(f"AVG(e[{i + 1}])" for i in range(_IVF_DIM))
     return f"""
     emb AS (
       SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
+      WHERE {where}
     ),
     seeds AS (
       SELECT ROW_NUMBER() OVER (ORDER BY e) - 1 AS cid, e AS c
       FROM (SELECT e FROM emb ORDER BY vec_id LIMIT {_IVF_K})
     ),
-    a1 AS (
-      SELECT vec_id, cid FROM (
-        SELECT v.vec_id, s.cid,
-               ROW_NUMBER() OVER (PARTITION BY v.vec_id
-                                  ORDER BY {fold_cosine_sql('v.e', 's.c')} DESC, s.cid) AS rk
-        FROM emb v CROSS JOIN seeds s
-      ) WHERE rk = 1
-    ),
+    a1 AS ({nearest_centroids_sql("emb", "seeds", _NEG_COS_SQL)}),
     cents AS (
       SELECT a1.cid, list_value({avgs}) AS c
       FROM a1 JOIN emb USING (vec_id) GROUP BY a1.cid
     ),
-    inv AS (
-      SELECT vec_id, cid FROM (
-        SELECT v.vec_id, c.cid,
-               ROW_NUMBER() OVER (PARTITION BY v.vec_id
-                                  ORDER BY {fold_cosine_sql('v.e', 'c.c')} DESC, c.cid) AS rk
-        FROM emb v CROSS JOIN cents c
-      ) WHERE rk = 1
-    ),
+    inv AS ({nearest_centroids_sql("emb", "cents", _NEG_COS_SQL)})"""
+
+
+def _ivf_ctes() -> str:
+    """The IVF pipeline as a reusable DuckDB CTE chain: the quantizer and
+    inverted lists (``_ivf_index_ctes``), then probes -> candidates ->
+    exact-rescored pairs — shared by the top-k oracle and the recall
+    audit."""
+    probes = nearest_centroids_sql(
+        "qs", "cents", f"-{fold_cosine_sql('v.qe', 'c.c')}", _IVF_NPROBE,
+        cols="v.query_id, c.cid", key="v.query_id")
+    return f"""{_ivf_index_ctes()},
     qs AS (SELECT vec_id AS query_id, e AS qe FROM emb ORDER BY vec_id LIMIT {N_QUERY_VECTORS}),
-    probes AS (
-      SELECT query_id, cid FROM (
-        SELECT q.query_id, c.cid,
-               ROW_NUMBER() OVER (PARTITION BY q.query_id
-                                  ORDER BY {fold_cosine_sql('q.qe', 'c.c')} DESC, c.cid) AS rk
-        FROM qs q CROSS JOIN cents c
-      ) WHERE rk <= {_IVF_NPROBE}
-    ),
+    probes AS ({probes}),
     cands AS (
       SELECT DISTINCT p.query_id, i.vec_id
       FROM inv i JOIN probes p ON i.cid = p.cid
@@ -637,53 +633,18 @@ def ivf_incremental_assign(snapshot: DataFrame, batch: DataFrame) -> DataFrame:
 
 
 def _ivf_incr_oracle_sql() -> str:
-    avgs = ", ".join(f"AVG(e[{i + 1}])" for i in range(_IVF_DIM))
     return f"""
-    WITH emb_s AS (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
-      WHERE vec_id < {_IVF_SPLIT}
-    ),
+    WITH {_ivf_index_ctes(f"vec_id < {_IVF_SPLIT}")},
     emb_b AS (
       SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
       WHERE vec_id >= {_IVF_SPLIT}
     ),
-    seeds AS (
-      SELECT ROW_NUMBER() OVER (ORDER BY e) - 1 AS cid, e AS c
-      FROM (SELECT e FROM emb_s ORDER BY vec_id LIMIT {_IVF_K})
-    ),
-    a1 AS (
-      SELECT vec_id, cid FROM (
-        SELECT v.vec_id, s.cid,
-               ROW_NUMBER() OVER (PARTITION BY v.vec_id
-                                  ORDER BY {fold_cosine_sql('v.e', 's.c')} DESC, s.cid) AS rk
-        FROM emb_s v CROSS JOIN seeds s
-      ) WHERE rk = 1
-    ),
-    cents AS (
-      SELECT a1.cid, list_value({avgs}) AS c
-      FROM a1 JOIN emb_s USING (vec_id) GROUP BY a1.cid
-    ),
-    inv_s AS (
-      SELECT vec_id, cid FROM (
-        SELECT v.vec_id, c.cid,
-               ROW_NUMBER() OVER (PARTITION BY v.vec_id
-                                  ORDER BY {fold_cosine_sql('v.e', 'c.c')} DESC, c.cid) AS rk
-        FROM emb_s v CROSS JOIN cents c
-      ) WHERE rk = 1
-    ),
-    inv_b AS (
-      SELECT vec_id, cid FROM (
-        SELECT v.vec_id, c.cid,
-               ROW_NUMBER() OVER (PARTITION BY v.vec_id
-                                  ORDER BY {fold_cosine_sql('v.e', 'c.c')} DESC, c.cid) AS rk
-        FROM emb_b v CROSS JOIN cents c
-      ) WHERE rk = 1
-    )
+    inv_b AS ({nearest_centroids_sql("emb_b", "cents", _NEG_COS_SQL)})
     SELECT c.cid,
            COALESCE(s.n_snapshot, 0) AS n_snapshot,
            COALESCE(b.n_batch, 0) AS n_batch
     FROM (SELECT cid FROM cents) c
-    LEFT JOIN (SELECT cid, COUNT(*) AS n_snapshot FROM inv_s GROUP BY cid) s
+    LEFT JOIN (SELECT cid, COUNT(*) AS n_snapshot FROM inv GROUP BY cid) s
       USING (cid)
     LEFT JOIN (SELECT cid, COUNT(*) AS n_batch FROM inv_b GROUP BY cid) b
       USING (cid)
@@ -947,12 +908,6 @@ def projected_topk(corpus: DataFrame, queries: DataFrame, k: int = TOP_K,
     )
 
 
-def _fold_cos_sql(a: str, b: str, dim: int) -> str:
-    """Back-compat alias of vectors.fold_cosine_sql (the canonical
-    bit-identical cosine replay — see its docstring)."""
-    return fold_cosine_sql(a, b, dim)
-
-
 def _projected_topk_oracle_sql() -> str:
     c = RP_EXPAND * TOP_K
     return f"""
@@ -968,10 +923,10 @@ def _projected_topk_oracle_sql() -> str:
     cands AS (
       SELECT query_id, vec_id FROM (
         SELECT q.query_id, c.vec_id,
-               ROUND({_fold_cos_sql('pq.pl', 'c.pl', RP_DIM)}, 6) AS pcos,
+               ROUND({fold_cosine_sql('pq.pl', 'c.pl', RP_DIM)}, 6) AS pcos,
                ROW_NUMBER() OVER (
                  PARTITION BY q.query_id
-                 ORDER BY ROUND({_fold_cos_sql('pq.pl', 'c.pl', RP_DIM)}, 6) DESC,
+                 ORDER BY ROUND({fold_cosine_sql('pq.pl', 'c.pl', RP_DIM)}, 6) DESC,
                           c.vec_id) AS crank
         FROM proj c
         CROSS JOIN queries q
@@ -981,10 +936,10 @@ def _projected_topk_oracle_sql() -> str:
     )
     SELECT query_id, rank, vec_id, cosine FROM (
       SELECT cd.query_id, cd.vec_id,
-             ROUND({_fold_cos_sql('qe.e', 'ce.e', RP_IN_DIM)}, 6) AS cosine,
+             ROUND({fold_cosine_sql('qe.e', 'ce.e', RP_IN_DIM)}, 6) AS cosine,
              ROW_NUMBER() OVER (
                PARTITION BY cd.query_id
-               ORDER BY ROUND({_fold_cos_sql('qe.e', 'ce.e', RP_IN_DIM)}, 6)
+               ORDER BY ROUND({fold_cosine_sql('qe.e', 'ce.e', RP_IN_DIM)}, 6)
                           DESC,
                         cd.vec_id) AS rank
       FROM cands cd
@@ -1049,7 +1004,7 @@ def projected_recall(corpus: DataFrame, queries: DataFrame,
 
 def _projected_recall_oracle_sql() -> str:
     c = RP_EXPAND * TOP_K
-    brute_cos = _fold_cos_sql("qe.e", "ce.e", RP_IN_DIM)
+    brute_cos = fold_cosine_sql("qe.e", "ce.e", RP_IN_DIM)
     return f"""
     WITH emb AS (
       SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
@@ -1077,7 +1032,7 @@ def _projected_recall_oracle_sql() -> str:
         SELECT q.query_id, c.vec_id,
                ROW_NUMBER() OVER (
                  PARTITION BY q.query_id
-                 ORDER BY ROUND({_fold_cos_sql('pq.pl', 'c.pl', RP_DIM)},
+                 ORDER BY ROUND({fold_cosine_sql('pq.pl', 'c.pl', RP_DIM)},
                                 6) DESC,
                           c.vec_id) AS crank
         FROM proj c

@@ -1,14 +1,22 @@
-"""Shared vector primitives: cosine similarity, the nearest-centroid
-kernel with its fixed-point Lloyd update, and deterministic
-random-hyperplane LSH bucketing.
+"""Shared vector primitives: cosine similarity, squared L2, the
+nearest-centroid kernel with its fixed-point Lloyd update, and
+deterministic random-hyperplane LSH bucketing.
 
 The similarity-search operators (operators/similarity.py) and the
 embedding near-dup operator (operators/dedup.py) share one bucket
-assignment; k-means, SemDeDup, PQ and IVF share one argmin over
-centroids and one centroid update. Everything is a pure JVM column
-expression (zip_with / aggregate / transform) — no Python in the hot
-path — and the hyperplanes are derived from fixed integer mixes, so
-bucket assignment is reproducible across runs and engines.
+assignment; k-means, SemDeDup, PQ, IVF and the prototype classifier
+share one argmin over centroids and one centroid update. Everything is
+a pure JVM column expression (zip_with / aggregate / transform) — no
+Python in the hot path — and the hyperplanes are derived from fixed
+integer mixes, so bucket assignment is reproducible across runs and
+engines.
+
+Each Spark expression has one DuckDB twin that the oracles replay:
+``fold_cosine_sql`` (``cosine_sim``), ``sqdist_sql`` (``sqdist``),
+``nearest_centroids_sql`` (``nearest_centroids``: the same (dist, cid)
+tie rule) and ``lloyd_update_sql`` (``lloyd_update``: the same
+fixed-point arithmetic). The twins are SQL text only, so the oracles
+stay an independent replay that shares no code with the Spark side.
 """
 
 from __future__ import annotations
@@ -80,6 +88,23 @@ def fold_cosine_sql(a: str, b: str, dim: int = 64) -> str:
     return f"({dot} / ({na} * {nb}))"
 
 
+def sqdist(a: Column, b: Column) -> Column:
+    """Squared L2 as an explicit left fold over the elements in index
+    order (0.0 init, so both engines add the same terms in the same
+    order; the oracle twin is ``sqdist_sql``)."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0), lambda acc, v: acc + v,
+    )
+
+
+def sqdist_sql(v: str, c: str, dim: int = 64) -> str:
+    """DuckDB twin of ``sqdist``: the same left fold in index order."""
+    return (f"list_reduce(list_transform(range(1, {dim} + 1), "
+            f"i -> ({v}[i] - {c}[i]) * ({v}[i] - {c}[i])), "
+            "(a, b) -> a + b)")
+
+
 def nearest_centroids(vec: Column, cents: Column,
                       dist: Callable[[Column, Column], Column], n: int,
                       *carry: str) -> Column:
@@ -132,6 +157,48 @@ def lloyd_update(df: DataFrame, keys: Sequence[str],
             lambda s: s["coord"],
         ).alias("c"))
     )
+
+
+def nearest_centroids_sql(vectors: str, centroids: str, dist: str,
+                          n: int = 1, cols: str = "v.vec_id, c.cid",
+                          key: str = "v.vec_id", cid: str = "c.cid",
+                          on: str | None = None) -> str:
+    """DuckDB twin of ``nearest_centroids``: a SELECT of the ``n``
+    nearest centroids per vector, one row each, as ``cols`` plus
+    ``dist``.
+
+    ``vectors`` and ``centroids`` are relations (a CTE name or a
+    parenthesised subquery) aliased ``v`` and ``c``; ``dist`` is
+    lower-is-nearer SQL over them (``sqdist_sql``, or a negated
+    ``fold_cosine_sql``); ``key`` identifies a vector and ``cid`` a
+    centroid. The rank orders on (dist, cid), so an exact distance tie
+    goes to the lower id, as the Spark struct order does. ``on``
+    restricts each vector to the centroids it may join (the IVF fine
+    cells); without it every vector meets every centroid."""
+    join = f"JOIN {centroids} c ON {on}" if on else f"CROSS JOIN {centroids} c"
+    return f"""SELECT {cols}, {dist} AS dist
+      FROM {vectors} v {join}
+      QUALIFY ROW_NUMBER() OVER (PARTITION BY {key}
+                                 ORDER BY {dist}, {cid}) <= {n}"""
+
+
+def lloyd_update_sql(assigned: str, keys: str, dim: int = 64) -> str:
+    """DuckDB twin of ``lloyd_update``: a SELECT of (keys, c), the
+    per-dimension mean of the ``e`` vectors over each ``keys`` group of
+    the ``assigned`` relation, with the same floor(val * COORD_UNIT)
+    BIGINT sums and one double division per coordinate."""
+    return f"""SELECT {keys},
+             list(CAST(su AS DOUBLE) / cnt / {COORD_UNIT} ORDER BY pos) AS c
+      FROM (
+        SELECT {keys}, pos,
+               CAST(SUM(CAST(floor(val * {COORD_UNIT}) AS BIGINT)) AS BIGINT)
+                 AS su,
+               COUNT(*) AS cnt
+        FROM (SELECT {keys}, unnest(range(1, {dim} + 1)) AS pos,
+                     unnest(e) AS val
+              FROM {assigned})
+        GROUP BY {keys}, pos
+      ) GROUP BY {keys}"""
 
 
 # Default 16 tables x 4 bits: per-table collision prob for angle θ is

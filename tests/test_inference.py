@@ -217,7 +217,7 @@ def test_sampling_inference_single_job_wide_table(spark):
     sc = spark.sparkContext
     sc.setJobGroup("wide-infer", "inference job-count gate")
     try:
-        schema = infer_table_schema(df, row_count=100)
+        schema = infer_table_schema(df)
     finally:
         sc.setJobGroup("", "")
     jobs = sc.statusTracker().getJobIdsForGroup("wide-infer")
@@ -242,7 +242,7 @@ def test_sampling_inference_null_and_mixed_columns(spark):
     df = spark.createDataFrame(
         rows, "a string, b string, c string, d string"
     ).withColumn("e", F.lit(None).cast("string"))
-    schema = infer_table_schema(df, row_count=3)
+    schema = infer_table_schema(df)
     assert schema["a"] == "smallint"   # nulls skipped, ints resolved
     assert schema["b"] == "boolean"
     assert schema["c"] == "date"

@@ -121,17 +121,10 @@ def test_bench_and_scale_lists_cover_only_registered_queries():
     missing_headline = [n for n in bench.HEADLINE if n not in names]
     assert not missing_headline, \
         f"bench HEADLINE not registered: {missing_headline}"
-    missing_legacy = [n for n in bench._LEGACY_EXTRA if n not in names]
-    assert not missing_legacy, \
-        f"bench legacy extras not registered: {missing_legacy}"
     # the no-silent-caps invariant: headline + derived extras = registry
-    legacy = [n for n in bench._LEGACY_EXTRA
-              if n in names and n not in bench.HEADLINE
-              and n not in bench.EXCLUDED]
-    newly = sorted(n for n in names
-                   if n not in bench.HEADLINE and n not in bench.EXCLUDED
-                   and n not in legacy)
-    timed = set(bench.HEADLINE) | set(legacy) | set(newly)
+    extras = sorted(n for n in names
+                    if n not in bench.HEADLINE and n not in bench.EXCLUDED)
+    timed = set(bench.HEADLINE) | set(extras)
     untimed = names - timed - set(bench.EXCLUDED)
     assert not untimed, f"registered but silently untimed: {sorted(untimed)}"
     for name, reason in bench.EXCLUDED.items():
